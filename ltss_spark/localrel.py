@@ -33,24 +33,11 @@ def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
     rows = list(rows)
     if not rows:
         return spark.createDataFrame([], schema)
-    # the LocalTableScan plan depends on the Arrow conversion path; a
-    # session built outside ltss_spark.session (scripts, embedders) may
-    # not have it enabled, silently regressing every driver-replay frame
-    # to the pickled-RDD scan this module exists to avoid (ADVICE r12).
-    # The conversion happens eagerly inside createDataFrame, so the conf
-    # is SCOPED to this call and restored — a host that deliberately
-    # disabled Arrow keeps its setting for its own frames (r13
-    # self-review).
+    # the LocalTableScan plan depends on the Arrow conversion path, which
+    # get_spark and pin_session_for_oracle enable; a host session that
+    # keeps Arrow off gets createDataFrame's own fallback (the pickled-RDD
+    # scan) — this function never changes the session's conf
     import pandas as pd
 
-    key = "spark.sql.execution.arrow.pyspark.enabled"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "true")
-    try:
-        pdf = pd.DataFrame(rows, columns=schema.fieldNames(), dtype=object)
-        return spark.createDataFrame(pdf, schema)
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+    pdf = pd.DataFrame(rows, columns=schema.fieldNames(), dtype=object)
+    return spark.createDataFrame(pdf, schema)

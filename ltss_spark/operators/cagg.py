@@ -170,23 +170,14 @@ def refresh_rollup(
         "p_bucket", F.date_format("bucket", "yyyy-MM-dd-HH-mm-ss")
     )
 
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    try:
-        # dynamic: only the stale buckets' partitions are replaced; the
-        # first build uses static mode (nothing to preserve)
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode",
-            "static" if first_build else "dynamic",
-        )
-        # rebalance-by-bucket (r12): agg() leaves the frame partitioned
-        # by its group keys, so each task would write a file into every
-        # stale bucket it touches (the small-files fan-out fixed on the
-        # other partitioned writers this round)
-        fresh.hint("rebalance", "p_bucket").write.mode("overwrite").partitionBy(
-            "p_bucket"
-        ).parquet(f"{rollup_path}/data")
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    # dynamic: only the stale buckets' partitions are replaced; the first
+    # build uses static mode (nothing to preserve). rebalance-by-bucket
+    # (r12): agg() leaves the frame partitioned by its group keys, so each
+    # task would write a file into every stale bucket it touches (the
+    # small-files fan-out fixed on the other partitioned writers this round)
+    fresh.hint("rebalance", "p_bucket").write.mode("overwrite").option(
+        "partitionOverwriteMode", "static" if first_build else "dynamic"
+    ).partitionBy("p_bucket").parquet(f"{rollup_path}/data")
 
     # deleted buckets (present in rollup, gone from source) cannot be
     # dropped by dynamic overwrite; the sidecar is rewritten to the CURRENT

@@ -150,17 +150,12 @@ def cdc_apply(
     if not buckets:
         return []
     resolved = _resolve_survivors(spark, path, ch, buckets, pk, version_col)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    try:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        # rebalance-by-bucket (r12): resolved leaves the PK window
-        # partitioned by hash(pk), so each task would write a file into
-        # every bucket it touches
-        resolved.hint("rebalance", BUCKET_COL).write.mode("overwrite").partitionBy(
-            BUCKET_COL
-        ).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    # rebalance-by-bucket (r12): resolved leaves the PK window
+    # partitioned by hash(pk), so each task would write a file into
+    # every bucket it touches
+    resolved.hint("rebalance", BUCKET_COL).write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy(BUCKET_COL).parquet(path)
     return buckets
 
 
@@ -209,14 +204,11 @@ def cdc_compact(
     remaining = scoped.filter(~purgeable).localCheckpoint()
     kept = {r[BUCKET_COL] for r in remaining.select(BUCKET_COL).distinct().collect()}
     if kept:
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        try:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            remaining.filter(F.col(BUCKET_COL).isin(sorted(kept))).hint(
-                "rebalance", BUCKET_COL
-            ).write.mode("overwrite").partitionBy(BUCKET_COL).parquet(path)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        remaining.filter(F.col(BUCKET_COL).isin(sorted(kept))).hint(
+            "rebalance", BUCKET_COL
+        ).write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
+            BUCKET_COL
+        ).parquet(path)
     hconf = spark._jsc.hadoopConfiguration()
     for b in (b for b in buckets if b not in kept):
         jdir = spark._jvm.org.apache.hadoop.fs.Path(f"{path}/{BUCKET_COL}={b}")
@@ -259,12 +251,14 @@ def run_cdc_stream(
     # window + bucket rewrite otherwise fan out to the batch session's
     # core-count constant per batch; env-overridable via
     # LTSS_STREAM_STATE_PARTITIONS like every bounded-stream driver
-    from ltss_spark.streaming.windows import bounded_source_state_partitions
+    from ltss_spark.session import scoped_conf
+    from ltss_spark.streaming.windows import (
+        SHUFFLE_PARTITIONS,
+        bounded_source_state_partitions,
+    )
 
     n_parts = bounded_source_state_partitions(changes_dir)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
-    try:
+    with scoped_conf(spark, {SHUFFLE_PARTITIONS: n_parts}):
         q = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", str(max_files_per_trigger))
@@ -274,6 +268,4 @@ def run_cdc_stream(
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    q.awaitTermination()

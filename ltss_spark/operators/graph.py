@@ -162,7 +162,6 @@ def connected_components(
     src: str = "doc_a",
     dst: str = "doc_b",
     max_iter: int = 25,
-    tune_session_shuffle: bool = False,
     stats: dict | None = None,
     small_graph_edges: int = SMALL_GRAPH_EDGES,
 ) -> DataFrame:
@@ -172,19 +171,6 @@ def connected_components(
 
     ``max_iter`` is a safety bound: large/small-star provably converges in
     O(log^2 n) alternations, so 25 covers any physically storable graph.
-
-    ``tune_session_shuffle`` (opt-in) scopes spark.sql.shuffle.partitions
-    to the EDGE COUNT for the loop's duration: each round is ~5 tiny
-    stages, and on a small edge set the fixed cost of scheduling
-    session-default-many shuffle tasks can dominate the round. Measured
-    history: r3 saw ~25 % from 32 -> 4 partitions; re-measured in r5
-    (interleaved 4x reps at sf0.1) the knob is NEUTRAL — AQE partition
-    coalescing now captures the win, and the knob costs one edges.count()
-    job plus a SESSION-WIDE conf mutation for the loop's duration
-    (restored even on error) that other threads of the same session would
-    silently inherit. Hence off by default and no longer enabled by the
-    registry entries; retained for sessions that must run with AQE
-    disabled, where the r3 rationale still applies.
     """
     edges = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
         F.col("a") != F.col("b")
@@ -210,60 +196,39 @@ def connected_components(
     # few final-stage partitions (bounded by the incremental limit jobs),
     # not a second upstream pass.
     edges = edges.localCheckpoint()
-    spark = edges.sparkSession
-    conf = spark.conf
-    prev_shuf = conf.get("spark.sql.shuffle.partitions", "200")
-    sess_parts = None
-    if tune_session_shuffle:
-        try:
-            sess_parts = int(prev_shuf)
-        except (TypeError, ValueError):
-            sess_parts = None  # non-numeric (custom session) — leave untouched
-    if sess_parts is not None:
-        n_edges = edges.count()
-        target = min(sess_parts, max(4, (n_edges + 49_999) // 50_000 * 4))
-        conf.set("spark.sql.shuffle.partitions", str(target))
-    try:
-        # LAZY localCheckpoint per round: lineage is cut every round (each
-        # star references its input 2-3x, so an uncut plan grows
-        # exponentially with rounds), but the checkpoint blocks are written
-        # by the checksum aggregate's own job — ONE job per round where an
-        # eager checkpoint + checksum pair costs two.
-        edges = _large_star(edges).localCheckpoint(eager=False)
-        prev = _edge_checksum(edges)
-        rounds = 1
-        for _ in range(max_iter):
-            edges = _small_star(
-                _large_star(edges, dedup=False)
-            ).localCheckpoint(eager=False)
-            cur = _edge_checksum(edges)
-            rounds += 1
-            if cur == prev:
-                break
-            prev = cur
-        if stats is not None:
-            # observability for the scale probe: star rounds grow
-            # O(log^2 n); the probe charts this at 1x-32x (docs/SCALING.md)
-            stats["rounds"] = rounds
-            stats["path"] = "star"
-        # Converged state is a star per component: (member, min).
-        # Components of size >= 2 have one row per non-min member; add the
-        # min itself. NOTE: this returned aggregate is LAZY — it executes
-        # after the finally below restores the session conf, so it plans
-        # at session parallelism (fine: it is one aggregation over the
-        # checkpointed edge blocks, and AQE coalesces it). Only the loop's
-        # own actions run under the (opt-in) scoped parallelism.
-        return (
-            edges.select(F.col("a").alias("node"), F.col("b").alias("component"))
-            .union(
-                edges.select(F.col("b").alias("node"), F.col("b").alias("component"))
-            )
-            .groupBy("node")
-            .agg(F.min("component").alias("component"))
+    # LAZY localCheckpoint per round: lineage is cut every round (each
+    # star references its input 2-3x, so an uncut plan grows
+    # exponentially with rounds), but the checkpoint blocks are written
+    # by the checksum aggregate's own job — ONE job per round where an
+    # eager checkpoint + checksum pair costs two.
+    edges = _large_star(edges).localCheckpoint(eager=False)
+    prev = _edge_checksum(edges)
+    rounds = 1
+    for _ in range(max_iter):
+        edges = _small_star(
+            _large_star(edges, dedup=False)
+        ).localCheckpoint(eager=False)
+        cur = _edge_checksum(edges)
+        rounds += 1
+        if cur == prev:
+            break
+        prev = cur
+    if stats is not None:
+        # observability for the scale probe: star rounds grow
+        # O(log^2 n); the probe charts this at 1x-32x (docs/SCALING.md)
+        stats["rounds"] = rounds
+        stats["path"] = "star"
+    # Converged state is a star per component: (member, min).
+    # Components of size >= 2 have one row per non-min member; add the
+    # min itself.
+    return (
+        edges.select(F.col("a").alias("node"), F.col("b").alias("component"))
+        .union(
+            edges.select(F.col("b").alias("node"), F.col("b").alias("component"))
         )
-    finally:
-        if sess_parts is not None:
-            conf.set("spark.sql.shuffle.partitions", prev_shuf)
+        .groupBy("node")
+        .agg(F.min("component").alias("component"))
+    )
 
 
 def dedup_clusters(
@@ -272,16 +237,13 @@ def dedup_clusters(
     id_col: str = "doc_id",
     src: str = "doc_a",
     dst: str = "doc_b",
-    tune_session_shuffle: bool = False,
 ) -> DataFrame:
     """Cluster every document: (doc_id, cluster_id, n_members, is_survivor).
 
     Docs not in any pair are singleton clusters of themselves. Survivor =
     the cluster minimum (deterministic). The only joins are on doc_id /
     cluster_id equi-keys; cluster sizes come from one hash aggregation."""
-    comp = connected_components(
-        pairs, src, dst, tune_session_shuffle=tune_session_shuffle
-    )
+    comp = connected_components(pairs, src, dst)
     labeled = docs.select(F.col(id_col).alias("doc_id")).join(
         comp.withColumnRenamed("node", "doc_id"), "doc_id", "left"
     )

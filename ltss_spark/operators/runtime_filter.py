@@ -21,17 +21,16 @@ reach 10 GB, so :func:`bloom_pruned_join` arms the rule explicitly for
 the duration of PLAN OPTIMIZATION only — the thresholds are read by the
 logical optimizer exactly once per query, when the plan is first
 materialized, so forcing the ``DataFrame``'s query execution eagerly
-inside the scoped conf block freezes the injected filter into the plan
-while leaving the session's thresholds untouched for everything else
-(same scoping discipline as ``pin_session_for_oracle``: no lasting
-session-wide mutation).
+inside ``session.scoped_conf`` freezes the injected filter into the plan
+while leaving the session's thresholds untouched for everything else (no
+lasting session-wide mutation).
 """
 
 from __future__ import annotations
 
-from contextlib import contextmanager
+from pyspark.sql import DataFrame
 
-from pyspark.sql import DataFrame, SparkSession
+from ltss_spark.session import scoped_conf
 
 
 #: confs InjectRuntimeFilter consults at logical-optimization time.
@@ -47,21 +46,6 @@ _SCOPED = {
     # which at 100 TB it would not — pin the shuffle-join shape
     "spark.sql.autoBroadcastJoinThreshold": "-1",
 }
-
-
-@contextmanager
-def _scoped_conf(spark: SparkSession, overrides: dict[str, str]):
-    prev = {k: spark.conf.get(k, None) for k in overrides}
-    try:
-        for k, v in overrides.items():
-            spark.conf.set(k, v)
-        yield
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def freeze_plan(df: DataFrame) -> DataFrame:
@@ -90,7 +74,7 @@ def with_runtime_bloom(df: DataFrame) -> DataFrame:
         Filter might_contain(scalar-subquery(bloom_filter_agg(dim_key)),
                              xxhash64(fact_key))   <- below fact's Exchange
     """
-    with _scoped_conf(df.sparkSession, _SCOPED):
+    with scoped_conf(df.sparkSession, _SCOPED):
         return freeze_plan(df)
 
 

@@ -167,7 +167,32 @@ _DRIVER_PRIORITY: list[str] = [
 #: entries with a PRE-existing driver row whose implementation changed
 #: materially this round — they justify a window slot exactly like a
 #: never-verified entry (tests/test_plans.py window-packing guard).
-_CHANGED_ENTRIES: set[str] = set(_DRIVER_PRIORITY[:20])
+#: Enumerated, not sliced from _DRIVER_PRIORITY: stream_dedup_near
+#: (stage_batches staging, scoped stream partitions) sits in the drain
+#: block and is changed all the same.
+_CHANGED_ENTRIES: set[str] = {
+    "ext_sim_search_lsh",
+    "stream_ingest",
+    "stream_upsert",
+    "stream_stateful",
+    "stream_changepoint",
+    "stream_gap_close",
+    "stream_tws_totals",
+    "stream_tws_ooo",
+    "stream_distinct_state",
+    "stream_list_state",
+    "stream_state_bootstrap",
+    "stream_join",
+    "stream_dedup",
+    "stream_late_drop",
+    "stream_watermark",
+    "stream_window_tumbling",
+    "stream_window_sliding",
+    "stream_window_session",
+    "stream_cdc",
+    "stream_rollup",
+    "stream_dedup_near",
+}
 
 # Entries with an existing green driver row; least-recently-verified first
 # (r8 remainder, then r9, r10, r11, then the r12-verified cohort) — any

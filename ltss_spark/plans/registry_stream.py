@@ -482,6 +482,19 @@ def stage_batches(frame, batch_col, n_batches: int, src: str) -> None:
         .write.partitionBy("__b")
         .parquet(tmp)
     )
+    # a row whose batch_col is NULL or out of range lands in a directory
+    # no batch file is moved from (NULL: __b=__HIVE_DEFAULT_PARTITION__);
+    # the listing is driver-side, no extra Spark job
+    batch_dirs = {f"__b={i}" for i in range(n_batches)}
+    stray = sorted(
+        d for d in os.listdir(tmp) if d.startswith("__b=") and d not in batch_dirs
+    )
+    if stray:
+        shutil.rmtree(tmp)
+        raise ValueError(
+            f"stage_batches: rows with batch_col NULL or outside "
+            f"[0, {n_batches}) would be dropped: {stray}"
+        )
     now = 1_700_000_000
     for i in range(n_batches):
         dst = f"{src}/b{i}.parquet"

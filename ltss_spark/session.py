@@ -11,6 +11,8 @@ compares UTC-naive values.
 from __future__ import annotations
 
 import os
+import threading
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -77,9 +79,9 @@ def pin_session_for_oracle(spark: SparkSession) -> None:
     the session timezone — the canary that flags a foreign/mutated
     session — and skip the other six sets while it still reads UTC. A
     caller that mutates a non-TZ knob mid-session owns re-pinning it
-    (none of ours do — the one scoped override, connected_components'
-    opt-in shuffle tuning, restores the previous value itself); mutating
-    the timezone re-triggers the full pin, which keeps the hostile-session
+    (no public op does: writers pass per-write options, and
+    :func:`scoped_conf` restores every key it overrides); mutating the
+    timezone re-triggers the full pin, which keeps the hostile-session
     contract (tests/test_plans.py::test_hostile_session_timezone_is_pinned).
     """
     key = spark.sparkContext.applicationId
@@ -102,3 +104,38 @@ def pin_session_for_oracle(spark: SparkSession) -> None:
 
 #: applicationIds already pinned — see pin_session_for_oracle docstring
 _PINNED: set[str] = set()
+
+
+#: serializes every scoped_conf override, so two overrides never interleave
+#: their set/restore and one never restores a value another one set
+_CONF_LOCK = threading.Lock()
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, overrides: dict):
+    """The one sanctioned override of the shared session conf: set
+    ``overrides`` (values rendered with ``str``; a ``None`` value leaves
+    its key alone), run the block, restore every key to its previous value
+    or unset it.
+
+    Hold it only around a step that FREEZES the conf it reads: a
+    ``freeze_plan`` (the optimizer reads its thresholds once per plan) or
+    a streaming query's ``.start()`` (the query clones the session there,
+    and its state-store partition count and provider are fixed by that
+    clone for the checkpoint's lifetime — foreachBatch bodies plan on
+    ``batch.sparkSession``, the clone). Never hold it across
+    ``awaitTermination``: other threads of the session plan against the
+    live conf meanwhile."""
+    overrides = {k: str(v) for k, v in overrides.items() if v is not None}
+    with _CONF_LOCK:
+        prev = {k: spark.conf.get(k, None) for k in overrides}
+        try:
+            for k, v in overrides.items():
+                spark.conf.set(k, v)
+            yield
+        finally:
+            for k, v in prev.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)

@@ -438,7 +438,9 @@ def quantile_bucket_sql(col_name: str, bounds: list[float]) -> str:
     Boundary literals go through CAST('<repr>' AS DOUBLE): repr is the
     shortest round-trip form, so the parsed double is bit-identical (a
     bare SQL decimal literal would parse as DECIMAL and change the
-    comparison's type promotion)."""
+    comparison's type promotion). Non-finite boundaries (a column holding
+    ±inf) render as 'inf'/'-inf', which the ANSI cast accepts (pinned by
+    tests/test_zorder.py::test_zorder_write_keeps_rows_with_non_finite_values)."""
     srt = sorted(float(x) for x in bounds)
 
     def go(lo: int, hi: int) -> str:
@@ -592,24 +594,23 @@ def upsert_partitioned(
         .filter(F.col("__rn") == 1)
         .drop("__rn", "__src")
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    try:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        # same layout rule as write_partitioned: entity-sorted when the
-        # column exists, plain otherwise (the pk is parameterized — don't
-        # assume the ltss schema)
-        # same rebalance-by-month rule as write_partitioned: the merged
-        # frame leaves the PK window partitioned by hash(pk), so an
-        # unhinted write fans every task across every touched month
-        resolved = resolved.hint("rebalance", "month")
-        out = (
-            resolved.sortWithinPartitions("entity_id", time_col)
-            if "entity_id" in resolved.columns
-            else resolved
-        )
-        out.write.mode("overwrite").partitionBy("month").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    # same layout rule as write_partitioned: entity-sorted when the
+    # column exists, plain otherwise (the pk is parameterized — don't
+    # assume the ltss schema)
+    # same rebalance-by-month rule as write_partitioned: the merged
+    # frame leaves the PK window partitioned by hash(pk), so an
+    # unhinted write fans every task across every touched month
+    resolved = resolved.hint("rebalance", "month")
+    out = (
+        resolved.sortWithinPartitions("entity_id", time_col)
+        if "entity_id" in resolved.columns
+        else resolved
+    )
+    # per-write dynamic overwrite: only the touched months are replaced,
+    # and the session's partitionOverwriteMode is never changed
+    out.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
+        "month"
+    ).parquet(path)
     if stats_unit is not None:
         # incremental sidecar maintenance: fingerprints recomputed only for
         # the touched months (a column-pruned, partition-pruned re-read of

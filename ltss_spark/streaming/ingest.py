@@ -376,35 +376,39 @@ def run_ingest_availablenow(
         from ltss_spark.scratch import scratch_dir
 
         checkpoint = scratch_dir("ltss_ckpt")
-    # scope the state/shuffle partition count to the bounded source size
+    # size the state/shuffle partition count from the bounded source
     # (guide §2; windows.bounded_source_state_partitions): the dedup path
     # keeps one state store per partition, and even the plain path shuffles
     # each micro-batch — sizing either to the batch session's core-count
     # constant pays ~32 store/task fixed costs per batch for KB-scale files
-    import glob as _glob
+    import fnmatch
     import os
 
-    from ltss_spark.streaming.windows import bounded_source_state_partitions
-
-    # size from the glob-MATCHED input only: source_dir holds every table,
-    # but the stream reads just path_glob (r13 self-review — sizing from
-    # the whole directory would derive the count from data the query
-    # never touches)
-    n_parts = bounded_source_state_partitions(
-        *_glob.glob(os.path.join(source_dir, path_glob))
+    from ltss_spark.session import scoped_conf
+    from ltss_spark.streaming.windows import (
+        SHUFFLE_PARTITIONS,
+        bounded_source_state_partitions,
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
-    try:
+
+    # size from the files the stream reads only: source_dir holds every
+    # table, and pathGlobFilter matches leaf file names at ANY depth, so
+    # the sizing walks the tree with the same filter
+    n_parts = bounded_source_state_partitions(
+        *(
+            os.path.join(root, f)
+            for root, _dirs, files in os.walk(source_dir)
+            for f in fnmatch.filter(files, path_glob)
+        )
+    )
+    # held across start() only: the query's cloned session keeps the count
+    with scoped_conf(spark, {SHUFFLE_PARTITIONS: n_parts}):
         q = (
             states.writeStream.foreachBatch(sink)
             .option("checkpointLocation", checkpoint)
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    q.awaitTermination()
 
 
 def streaming_bucket_counts(
@@ -419,6 +423,7 @@ def streaming_bucket_counts(
     the windows-module helpers (uuid-named memory table — a process-salted
     hash name could collide and silently share a table between queries)."""
     from ltss_spark.streaming.windows import (
+        SHUFFLE_PARTITIONS,
         bounded_events_stream,
         bounded_source_state_partitions,
         run_to_memory,
@@ -431,12 +436,8 @@ def streaming_bucket_counts(
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("w.start").alias("bucket_start"), "event_type", "n")
     )
-    return run_to_memory(
-        agg,
-        "complete",
-        "stream_bucket",
-        bounded_source_state_partitions(f"{source_dir}/events.parquet"),
-    )
+    n_parts = bounded_source_state_partitions(f"{source_dir}/events.parquet")
+    return run_to_memory(agg, "complete", "stream_bucket", {SHUFFLE_PARTITIONS: n_parts})
 
 
 def shutdown_streams(spark: SparkSession, timeout_s: int = 30) -> int:

@@ -192,12 +192,14 @@ def run_streaming_near_dup(
     # (r13, guide §2): micro-batches are single small files here and the
     # foreachBatch body's plans run without AQE coalescing help at the
     # fan-out stage; sized from the bounded source, env-overridable
-    from ltss_spark.streaming.windows import bounded_source_state_partitions
+    from ltss_spark.session import scoped_conf
+    from ltss_spark.streaming.windows import (
+        SHUFFLE_PARTITIONS,
+        bounded_source_state_partitions,
+    )
 
     n_parts = bounded_source_state_partitions(docs_dir)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
-    try:
+    with scoped_conf(spark, {SHUFFLE_PARTITIONS: n_parts}):
         q = (
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", str(max_files_per_trigger))
@@ -207,6 +209,4 @@ def run_streaming_near_dup(
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    q.awaitTermination()

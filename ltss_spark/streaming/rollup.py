@@ -79,12 +79,14 @@ def maintain_rollup_availablenow(
     # aggregation keeps one state-store instance per shuffle partition and
     # streaming has no AQE to coalesce — sized from the bounded source
     # instead of the batch session's core-count constant
-    from ltss_spark.streaming.windows import bounded_source_state_partitions
+    from ltss_spark.session import scoped_conf
+    from ltss_spark.streaming.windows import (
+        SHUFFLE_PARTITIONS,
+        bounded_source_state_partitions,
+    )
 
     n_parts = bounded_source_state_partitions(f"{source_dir}/events.parquet")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
-    try:
+    with scoped_conf(spark, {SHUFFLE_PARTITIONS: n_parts}):
         q = (
             agg.writeStream.foreachBatch(sink)
             .outputMode("update")
@@ -92,9 +94,7 @@ def maintain_rollup_availablenow(
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    q.awaitTermination()
 
 
 def read_rollup(spark: SparkSession, base: str) -> DataFrame:

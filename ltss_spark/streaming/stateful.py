@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ltss_spark.streaming.windows import (
+    ROCKSDB_STATE,
+    SHUFFLE_PARTITIONS,
     bounded_events_stream,
     bounded_source_state_partitions,
     run_to_memory,
@@ -73,11 +75,9 @@ def streaming_user_totals(spark: SparkSession, source_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
+    n_parts = bounded_source_state_partitions(f"{source_dir}/events.parquet")
     out = run_to_memory(
-        updates,
-        "update",
-        "stream_stateful",
-        bounded_source_state_partitions(f"{source_dir}/events.parquet"),
+        updates, "update", "stream_stateful", {SHUFFLE_PARTITIONS: n_parts}
     )
     # update-mode emissions accumulate in the memory sink; the final state
     # per user is the one with the largest n_events
@@ -380,27 +380,21 @@ def _run_totals_stream(
         def close(self) -> None:
             pass
 
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    updates = raw.groupBy("user_id").transformWithStateInPandas(
+        statefulProcessor=RunningTotals(),
+        outputStructType=(
+            "user_id bigint, ts timestamp, event_id bigint, "
+            "run_n bigint, run_sum double"
+        ),
+        outputMode="append",
+        timeMode="none",
     )
-    try:
-        updates = raw.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=RunningTotals(),
-            outputStructType=(
-                "user_id bigint, ts timestamp, event_id bigint, "
-                "run_n bigint, run_sum double"
-            ),
-            outputMode="append",
-            timeMode="none",
-        )
-        return run_to_memory(updates, "append", "stream_tws", state_partitions)
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    return run_to_memory(
+        updates,
+        "append",
+        "stream_tws",
+        {SHUFFLE_PARTITIONS: state_partitions, **ROCKSDB_STATE},
+    )
 
 
 def streaming_running_totals_tws(spark: SparkSession, source_dir: str) -> DataFrame:
@@ -636,32 +630,21 @@ def streaming_running_totals_tws_ooo(
         .parquet(src_path)
         .withWatermark("ts", f"{delay_ms} milliseconds")
     )
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    updates = raw.groupBy("user_id").transformWithStateInPandas(
+        statefulProcessor=OooTotals(),
+        outputStructType=(
+            "user_id bigint, ts timestamp, event_id bigint, "
+            "run_n bigint, run_sum double"
+        ),
+        outputMode="append",
+        timeMode="eventTime",
     )
-    try:
-        updates = raw.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=OooTotals(),
-            outputStructType=(
-                "user_id bigint, ts timestamp, event_id bigint, "
-                "run_n bigint, run_sum double"
-            ),
-            outputMode="append",
-            timeMode="eventTime",
-        )
-        return run_to_memory(
-            updates,
-            "append",
-            "stream_tws_ooo",
-            bounded_source_state_partitions(src_path),
-        )
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    return run_to_memory(
+        updates,
+        "append",
+        "stream_tws_ooo",
+        {SHUFFLE_PARTITIONS: bounded_source_state_partitions(src_path), **ROCKSDB_STATE},
+    )
 
 
 def streaming_distinct_types_tws(
@@ -731,29 +714,18 @@ def streaming_distinct_types_tws(
         .option("maxFilesPerTrigger", 1)
         .parquet(src_path)
     )
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    updates = raw.groupBy("user_id").transformWithStateInPandas(
+        statefulProcessor=DistinctTypes(),
+        outputStructType="user_id bigint, n_types bigint, n_events bigint",
+        outputMode="append",
+        timeMode="none",
     )
-    try:
-        updates = raw.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=DistinctTypes(),
-            outputStructType="user_id bigint, n_types bigint, n_events bigint",
-            outputMode="append",
-            timeMode="none",
-        )
-        out = run_to_memory(
-            updates,
-            "append",
-            "stream_distinct_state",
-            bounded_source_state_partitions(src_path),
-        )
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    out = run_to_memory(
+        updates,
+        "append",
+        "stream_distinct_state",
+        {SHUFFLE_PARTITIONS: bounded_source_state_partitions(src_path), **ROCKSDB_STATE},
+    )
     # one emission per (key, batch); the cumulative counters make the
     # final state the max-n_events row per key (update-mode convention)
     return (
@@ -856,32 +828,21 @@ def streaming_recent_k_tws(
         .option("maxFilesPerTrigger", 1)
         .parquet(src_path)
     )
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    updates = raw.groupBy("user_id").transformWithStateInPandas(
+        statefulProcessor=RecentK(),
+        outputStructType=(
+            "user_id bigint, seen_events bigint, "
+            "n_recent bigint, recent_sum double"
+        ),
+        outputMode="append",
+        timeMode="none",
     )
-    try:
-        updates = raw.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=RecentK(),
-            outputStructType=(
-                "user_id bigint, seen_events bigint, "
-                "n_recent bigint, recent_sum double"
-            ),
-            outputMode="append",
-            timeMode="none",
-        )
-        out = run_to_memory(
-            updates,
-            "append",
-            "stream_list_state",
-            bounded_source_state_partitions(src_path),
-        )
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    out = run_to_memory(
+        updates,
+        "append",
+        "stream_list_state",
+        {SHUFFLE_PARTITIONS: bounded_source_state_partitions(src_path), **ROCKSDB_STATE},
+    )
     return (
         out.groupBy("user_id")
         .agg(
@@ -983,30 +944,19 @@ def streaming_bootstrap_totals_tws(
         .option("maxFilesPerTrigger", 1)
         .parquet(src_path)
     )
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    updates = raw.groupBy("user_id").transformWithStateInPandas(
+        statefulProcessor=BootstrapTotals(),
+        outputStructType="user_id bigint, n_events bigint, total double",
+        outputMode="append",
+        timeMode="none",
+        initialState=init.groupBy("user_id"),
     )
-    try:
-        updates = raw.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=BootstrapTotals(),
-            outputStructType="user_id bigint, n_events bigint, total double",
-            outputMode="append",
-            timeMode="none",
-            initialState=init.groupBy("user_id"),
-        )
-        out = run_to_memory(
-            updates,
-            "append",
-            "stream_state_bootstrap",
-            bounded_source_state_partitions(src_path),
-        )
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    out = run_to_memory(
+        updates,
+        "append",
+        "stream_state_bootstrap",
+        {SHUFFLE_PARTITIONS: bounded_source_state_partitions(src_path), **ROCKSDB_STATE},
+    )
     return (
         out.groupBy("user_id")
         .agg(
@@ -1173,29 +1123,18 @@ def streaming_gap_close_tws(
         .parquet(src_path)
         .withWatermark("ts", "0 seconds")
     )
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    closes = raw.groupBy("user_id").transformWithStateInPandas(
+        statefulProcessor=GapClose(),
+        outputStructType="user_id bigint, last_ms bigint, closed_at_ms bigint",
+        outputMode="append",
+        timeMode="eventTime",
     )
-    try:
-        closes = raw.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=GapClose(),
-            outputStructType="user_id bigint, last_ms bigint, closed_at_ms bigint",
-            outputMode="append",
-            timeMode="eventTime",
-        )
-        return run_to_memory(
-            closes,
-            "append",
-            "stream_gap_close",
-            bounded_source_state_partitions(src_path),
-        )
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    return run_to_memory(
+        closes,
+        "append",
+        "stream_gap_close",
+        {SHUFFLE_PARTITIONS: bounded_source_state_partitions(src_path), **ROCKSDB_STATE},
+    )
 
 
 def gap_close_replay(
@@ -1414,4 +1353,6 @@ def streaming_cusum(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    return run_to_memory(updates, "append", "stream_cusum", state_partitions)
+    return run_to_memory(
+        updates, "append", "stream_cusum", {SHUFFLE_PARTITIONS: state_partitions}
+    )

@@ -26,7 +26,19 @@ import uuid
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ltss_spark.session import scoped_conf
 from ltss_spark.sources.batch import normalize_event_times
+
+#: session-conf key a stream fixes its state-store partition count from at
+#: start — the key of a ``run_to_memory`` start-time override
+SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+#: start-time override that keeps a stream's state in RocksDB (the
+#: transformWithStateInPandas operators require it)
+ROCKSDB_STATE = {
+    "spark.sql.streaming.stateStore.providerClass": (
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    )
+}
 
 #: bytes of bounded-stream input per state partition. One state store
 #: instance (plus its per-micro-batch commit) per partition is the fixed
@@ -120,24 +132,20 @@ def run_to_memory(
     df: DataFrame,
     output_mode: str,
     name_hint: str,
-    state_partitions: int | None = None,
+    start_conf: dict | None = None,
 ) -> DataFrame:
     """Run a bounded streaming query to completion through a memory sink and
     return the finished result as a batch DataFrame.
 
-    ``state_partitions`` (callers: :func:`bounded_source_state_partitions`)
-    scopes ``spark.sql.shuffle.partitions`` around the query — the value is
-    captured at query start and fixes the state-store partition count for
-    the checkpoint's lifetime, which for these bounded one-shot runs is
-    exactly this call. The previous session value is restored before
-    returning, so batch plans are untouched."""
+    ``start_conf`` overrides session conf for the query's ``.start()`` only
+    (:func:`ltss_spark.session.scoped_conf`): the query clones the session
+    there, so e.g. ``{SHUFFLE_PARTITIONS: bounded_source_state_partitions(...)}``
+    fixes the state-store partition count for the checkpoint's lifetime —
+    for these bounded one-shot runs, exactly this call — while the session
+    itself is restored before the query runs."""
     spark = df.sparkSession
-    prev = None
-    if state_partitions is not None:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        name = f"{name_hint}_{uuid.uuid4().hex[:12]}"
+    name = f"{name_hint}_{uuid.uuid4().hex[:12]}"
+    with scoped_conf(spark, start_conf or {}):
         q = (
             df.writeStream.format("memory")
             .queryName(name)
@@ -145,10 +153,7 @@ def run_to_memory(
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+    q.awaitTermination()
     return spark.table(name)
 
 
@@ -167,12 +172,8 @@ def streaming_sliding_counts(
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("w.start").alias("window_start"), "event_type", "n")
     )
-    return run_to_memory(
-        agg,
-        "complete",
-        "stream_sliding",
-        bounded_source_state_partitions(f"{source_dir}/events.parquet"),
-    )
+    n_parts = bounded_source_state_partitions(f"{source_dir}/events.parquet")
+    return run_to_memory(agg, "complete", "stream_sliding", {SHUFFLE_PARTITIONS: n_parts})
 
 
 def streaming_session_windows(
@@ -198,12 +199,8 @@ def streaming_session_windows(
             "id_checksum",
         )
     )
-    return run_to_memory(
-        agg,
-        "complete",
-        "stream_session",
-        bounded_source_state_partitions(f"{source_dir}/events.parquet"),
-    )
+    n_parts = bounded_source_state_partitions(f"{source_dir}/events.parquet")
+    return run_to_memory(agg, "complete", "stream_session", {SHUFFLE_PARTITIONS: n_parts})
 
 
 def streaming_dedup(spark: SparkSession, source_dir: str) -> DataFrame:
@@ -216,12 +213,8 @@ def streaming_dedup(spark: SparkSession, source_dir: str) -> DataFrame:
     deduped = raw.dropDuplicates(["user_id", "event_type"]).select(
         "user_id", "event_type"
     )
-    return run_to_memory(
-        deduped,
-        "append",
-        "stream_dedup",
-        bounded_source_state_partitions(f"{source_dir}/events.parquet"),
-    )
+    n_parts = bounded_source_state_partitions(f"{source_dir}/events.parquet")
+    return run_to_memory(deduped, "append", "stream_dedup", {SHUFFLE_PARTITIONS: n_parts})
 
 
 def streaming_counts_dropping_late(
@@ -252,7 +245,9 @@ def streaming_counts_dropping_late(
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("w.start").alias("bucket_start"), "event_type", "n")
     )
-    out = run_to_memory(agg, "update", "stream_late", state_partitions)
+    out = run_to_memory(
+        agg, "update", "stream_late", {SHUFFLE_PARTITIONS: state_partitions}
+    )
     # update mode re-emits a group each time it changes; keep the final count
     return (
         out.groupBy("bucket_start", "event_type")
@@ -309,9 +304,5 @@ def streaming_interval_join(
     # a stream-stream join keeps FOUR state stores per partition, so the
     # input-derived count matters 4x here (measured r13: 7.0 -> 2.9 s at
     # sf0.01 going from the session's 32 to the derived count)
-    return run_to_memory(
-        joined,
-        "append",
-        "stream_join",
-        bounded_source_state_partitions(f"{source_dir}/events.parquet"),
-    )
+    n_parts = bounded_source_state_partitions(f"{source_dir}/events.parquet")
+    return run_to_memory(joined, "append", "stream_join", {SHUFFLE_PARTITIONS: n_parts})

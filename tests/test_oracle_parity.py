@@ -15,14 +15,26 @@ def _registry():
 @pytest.mark.parametrize("q", _registry(), ids=lambda q: q.name)
 def test_oracle_parity(spark, q):
     from ltss_spark.plans.parity import compare
+    from ltss_spark.session import pin_session_for_oracle
 
+    # session conf is read-only after the pin: no entry may leave a
+    # changed setting behind for the next query of the session
+    pin_session_for_oracle(spark)
+    conf_before = spark.conf.getAll
     df = q.build(spark, SF_SMOKE)
     if q.oracle is None:
         # rows-only check, mirroring the driver's weaker path
         assert df.count() >= 0
-        return
-    ok, msg = compare(df, q.oracle, SF_SMOKE)
-    assert ok, f"{q.name}: {msg}"
+    else:
+        ok, msg = compare(df, q.oracle, SF_SMOKE)
+        assert ok, f"{q.name}: {msg}"
+    conf_after = spark.conf.getAll
+    changed = {
+        k: (conf_before.get(k), conf_after.get(k))
+        for k in conf_before.keys() | conf_after.keys()
+        if conf_before.get(k) != conf_after.get(k)
+    }
+    assert not changed, f"{q.name} changed session conf: {changed}"
 
 
 # ---------------------------------------------------------------------------

@@ -837,3 +837,66 @@ def test_gram_windows_string_and_column_forms_agree(spark):
     by_id = {r["doc_id"]: r["s"] for r in got}
     assert by_id[1] == ["a b c", "b c d", "c d e", "d e f"]
     assert by_id[2] == [] and by_id[3] == []
+
+
+def test_stage_batches_rejects_null_batch_col(spark, tmp_path):
+    """A row whose batch_col is NULL lands in __b=__HIVE_DEFAULT_PARTITION__,
+    which no batch file is moved from; staging must fail loudly instead of
+    silently dropping it."""
+    import pytest
+
+    from ltss_spark.plans.registry_stream import stage_batches
+
+    src = tmp_path / "src"
+    batch = F.when(F.col("id") < 8, F.col("id") % 2)  # ids 8, 9 -> NULL
+    with pytest.raises(ValueError, match="__HIVE_DEFAULT_PARTITION__"):
+        stage_batches(spark.range(10), batch, 2, str(src))
+    assert not (src / "__tmp").exists()
+
+
+def test_changed_entries_enumerates_stream_dedup_near():
+    """_CHANGED_ENTRIES is an enumerated set, not a positional slice of the
+    priority list: stream_dedup_near changed (stage_batches staging,
+    start-scoped partitions) while sitting in the drain block."""
+    from ltss_spark.plans.registry import _CHANGED_ENTRIES, _DRIVER_PRIORITY
+
+    assert "stream_dedup_near" in _CHANGED_ENTRIES
+    assert _CHANGED_ENTRIES <= set(_DRIVER_PRIORITY)
+
+
+def test_scoped_conf_serializes_concurrent_overrides(spark):
+    """session.scoped_conf is the one override of the shared session conf:
+    overlapping overrides from many threads must each see their own value
+    inside the block, and the key must end unset as it began (an unlocked
+    set/restore interleaving reads a neighbour's value or restores a stale
+    one)."""
+    import sys
+    import threading
+
+    from ltss_spark.session import scoped_conf
+
+    key = "spark.ltss.test.scopedConf"
+    assert spark.conf.get(key, None) is None
+    errors: list[str] = []
+
+    def worker(tid: int) -> None:
+        for i in range(20):
+            want = f"{tid}-{i}"
+            with scoped_conf(spark, {key: want}):
+                got = spark.conf.get(key, None)
+            if got != want:
+                errors.append(f"{want} read {got}")
+
+    prev_interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(t,)) for t in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(prev_interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors[:5]
+    assert spark.conf.get(key, None) is None

@@ -1484,3 +1484,140 @@ def test_cusum_fold_rejects_untrained_series():
     )
     with _pt.raises(ValueError, match="no trained control limits"):
         list(fold((99,), iter([pdf]), _FakeGroupState()))
+
+
+def test_stream_start_override_stays_out_of_session(spark, tmp_path):
+    """A bounded stateful stream started through session.scoped_conf with a
+    partition override and the RocksDB provider: the override lives in the
+    query's cloned session only. Inside foreachBatch the outer session
+    reads its own values, while the batch's session and the checkpoint
+    carry the override partition count and provider."""
+    import json
+    import os
+
+    from ltss_spark.session import scoped_conf
+    from ltss_spark.streaming.windows import ROCKSDB_STATE, SHUFFLE_PARTITIONS
+
+    (provider_key, rocksdb), = ROCKSDB_STATE.items()
+    session = (spark.conf.get(SHUFFLE_PARTITIONS), spark.conf.get(provider_key))
+    override = "3" if session[0] != "3" else "5"
+    assert session[1] != rocksdb
+    src, ckpt = tmp_path / "src", tmp_path / "ckpt"
+    for i in range(2):
+        spark.range(i * 100, (i + 1) * 100).select(
+            "id", (F.col("id") % 7).alias("k")
+        ).coalesce(1).write.parquet(str(src / f"b{i}"))
+    seen = []
+
+    def body(batch, epoch_id):
+        seen.append(
+            (
+                spark.conf.get(SHUFFLE_PARTITIONS),
+                spark.conf.get(provider_key),
+                batch.sparkSession.conf.get(SHUFFLE_PARTITIONS),
+                batch.count(),
+            )
+        )
+
+    counts = (
+        spark.readStream.schema("id long, k long")
+        .option("maxFilesPerTrigger", 1)
+        .option("recursiveFileLookup", "true")
+        .parquet(str(src))
+        .groupBy("k")
+        .count()
+    )
+    with scoped_conf(spark, {SHUFFLE_PARTITIONS: override, **ROCKSDB_STATE}):
+        q = (
+            counts.writeStream.foreachBatch(body)
+            .outputMode("update")
+            .option("checkpointLocation", str(ckpt))
+            .trigger(availableNow=True)
+            .start()
+        )
+    q.awaitTermination()
+
+    assert len(seen) == 2
+    for outer_parts, outer_provider, batch_parts, n in seen:
+        assert (outer_parts, outer_provider) == session
+        assert batch_parts == override
+        assert n == 7
+    parts = sorted(int(d) for d in os.listdir(ckpt / "state" / "0") if d.isdigit())
+    assert parts == list(range(int(override)))
+    meta = json.loads((ckpt / "offsets" / "0").read_text().splitlines()[1])
+    assert meta["conf"][SHUFFLE_PARTITIONS] == override
+    assert meta["conf"][provider_key] == rocksdb
+
+
+def test_ingest_stream_partition_override_stays_out_of_session(
+    spark, tmp_path, monkeypatch
+):
+    """run_ingest_availablenow sizes its stream's shuffle partitions for
+    the query's start only: while the stream runs, the outer session keeps
+    its own count and the foreachBatch body plans on the clone's."""
+    import ltss_spark.streaming.ingest as ingest
+
+    SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+    session = spark.conf.get(SHUFFLE_PARTITIONS)
+    override = "3" if session != "3" else "5"
+    monkeypatch.setenv("LTSS_STREAM_STATE_PARTITIONS", override)
+    seen = []
+    write = ingest._write_parquet_epoch
+
+    def spy(batch, out_path, epoch_id):
+        seen.append(
+            (
+                spark.conf.get(SHUFFLE_PARTITIONS),
+                batch.sparkSession.conf.get(SHUFFLE_PARTITIONS),
+            )
+        )
+        write(batch, out_path, epoch_id)
+
+    monkeypatch.setattr(ingest, "_write_parquet_epoch", spy)
+    ingest.run_ingest_availablenow(
+        spark,
+        SF_SMOKE,
+        out_path=str(tmp_path / "out"),
+        checkpoint=str(tmp_path / "ckpt"),
+    )
+    assert seen and all(s == (session, override) for s in seen)
+    assert spark.conf.get(SHUFFLE_PARTITIONS) == session
+
+
+def test_ingest_sizing_sees_nested_source_files(spark, tmp_path, monkeypatch):
+    """The stream's pathGlobFilter matches leaf files at any depth, so the
+    partition sizing must see exactly those files in a nested
+    (hive-partitioned) source layout, not the empty top level."""
+    import glob
+
+    import ltss_spark.streaming.windows as windows
+    from ltss_spark.ingest import states_from_events
+    from ltss_spark.sources.batch import load_table
+    from ltss_spark.streaming.ingest import run_ingest_availablenow
+
+    src = tmp_path / "src"
+    events = load_table(spark, SF_SMOKE, "events")
+    events.withColumn("half", F.col("event_id") % 2).write.partitionBy(
+        "half"
+    ).parquet(str(src))
+    leaves = sorted(glob.glob(f"{src}/**/*.parquet", recursive=True))
+    assert leaves and not glob.glob(f"{src}/*.parquet")
+
+    sized = []
+    real = windows.bounded_source_state_partitions
+
+    def spy(*paths, **kw):
+        sized.append(sorted(paths))
+        return real(*paths, **kw)
+
+    monkeypatch.setattr(windows, "bounded_source_state_partitions", spy)
+    run_ingest_availablenow(
+        spark,
+        str(src),
+        out_path=str(tmp_path / "out"),
+        checkpoint=str(tmp_path / "ckpt"),
+        path_glob="*.parquet",
+    )
+    assert sized == [leaves]
+    landed = spark.read.parquet(str(tmp_path / "out"))
+    assert landed.count() == states_from_events(events).count()

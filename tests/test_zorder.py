@@ -227,3 +227,24 @@ def test_zorder_plan_has_no_interpreted_hof(spark):
     plan = buf.getvalue()
     assert "lambdafunction" not in plan and "ArrayFilter" not in plan, plan
     assert "CASE WHEN" in plan
+
+
+def test_zorder_write_keeps_rows_with_non_finite_values(spark):
+    """A z-ordered column holding ±inf and NaN yields non-finite quantile
+    boundaries (approxQuantile skips NaN, so they are ±inf). Their repr
+    ('inf'/'-inf') goes through quantile_bucket_sql's string cast, which
+    must accept it under ANSI; the written table holds exactly the input
+    rows, NULL included."""
+    inf, nan = float("inf"), float("nan")
+    vals = [inf] * 40 + [-inf] * 40 + [nan] * 40 + [float(i) for i in range(40)]
+    rows = [(i, v, float(i % 7)) for i, v in enumerate(vals)] + [(len(vals), None, 1.0)]
+    df = spark.createDataFrame(rows, "id long, x double, y double")
+    out = f"{tempfile.gettempdir()}/zorder_nonfinite_{uuid.uuid4().hex}"
+    zorder_write(df, out, cols=("x", "y"), bits=3, n_files=4)
+
+    def key(r):
+        x = r["x"]
+        return (r["id"], "nan" if x is not None and x != x else x, r["y"])
+
+    back = spark.read.parquet(out).collect()
+    assert sorted(map(key, back)) == sorted(map(key, df.collect()))
