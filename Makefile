@@ -1,10 +1,16 @@
 # Developer entry points. The sandbox has no Docker; targets that need it
 # say so and are safe to run anywhere Docker exists.
 
-.PHONY: test bench pg-live parity
+.PHONY: test tier1 bench pg-live parity
 
 test:
 	python -m pytest tests/ -q
+
+# The tier-1 gate exactly as ROADMAP.md states it: Spark sized to the
+# visible cores, local scratch under /tmp, a hard timeout, no pytest cache
+tier1:
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
+	timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 bench:
 	python bench.py

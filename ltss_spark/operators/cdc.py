@@ -21,12 +21,19 @@ replayed, out-of-order feed requires:
   Hudi/Iceberg soft-delete + compaction contract, re-expressed as plain
   parquet + one window.
 
+The merge and the write are not this module's: cdc_apply runs the keyed
+merge every partitioned writer shares (``sources.batch._merge_on_pk``,
+the rule upsert_partitioned applies by ``tie_breaker``) and its
+dynamic-overwrite tail (``_overwrite_partitions``). This module adds the
+bucket layout, the tombstones, the materialization before the overwrite
+(``_resolve_survivors``) and compaction.
+
 Scale shape (100 TB): the target is hash-bucket partitioned on the PK
 (``pmod(xxhash64(pk), n_buckets)`` — the Hudi bucket-index layout), so a
 batch rewrites ONLY the buckets its keys touch: cost ∝ touched buckets'
-data, never the table. The merge itself is one shuffle on the PK,
-co-located with the bucket partitioning; the touched-bucket list is the
-only driver-side collect and is bounded by ``n_buckets``. Unlike the
+data, never the table. The merge is one shuffle on the PK, co-located
+with the bucket partitioning; the touched-bucket list is the only
+driver-side collect and is bounded by ``n_buckets``. Unlike the
 month-partitioned upsert (which needs the partition key inside the PK),
 hash bucketing works for ANY primary key — the natural layout for a
 keyed dimension table maintained from a change stream.
@@ -35,7 +42,13 @@ keyed dimension table maintained from a change stream.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
+
+from ltss_spark.sources.batch import (
+    _merge_on_pk,
+    _overwrite_partitions,
+    _touched_partitions,
+)
 
 BUCKET_COL = "__cdc_bucket"
 TOMBSTONE_COL = "_tombstone"
@@ -54,15 +67,6 @@ def _with_bucket(df: DataFrame, pk: tuple[str, ...], n_buckets: int) -> DataFram
     )
 
 
-def _target_exists(spark: SparkSession, path: str) -> bool:
-    # Hadoop FS check (works for s3/hdfs URIs too); deliberately NOT a
-    # broad try/except around the read — a transient error must not be
-    # mistaken for "empty table" (same rule as upsert_partitioned)
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs.exists(jpath)
-
-
 def _resolve_survivors(
     spark: SparkSession,
     path: str,
@@ -71,36 +75,19 @@ def _resolve_survivors(
     pk: tuple[str, ...],
     version_col: str,
 ) -> DataFrame:
-    """LWW survivor per PK over existing ∪ batch, MATERIALIZED
-    (localCheckpoint) so its lineage no longer reads ``path``: the apply
+    """The frame cdc_apply hands to the overwrite: the shared keyed merge
+    (sources.batch._merge_on_pk, LWW by ``version_col``) of the bucketed
+    change frame ``ch`` over the ``buckets`` it touches, MATERIALIZED
+    (localCheckpoint) so its lineage no longer reads ``path``. The apply
     step dynamic-partition-overwrites the very buckets this frame is
     derived from, and a lazily-evaluated plan would be deleting its own
     input mid-commit — a failure there leaves buckets half-replaced with
     no way to recompute. Cutting the lineage to executor-held blocks
     first makes the overwrite a pure write of already-computed data
-    (the same contract cdc_compact established); the materialized size
-    is bounded by the touched buckets' data, never the table."""
-    if _target_exists(spark, path):
-        existing = (
-            spark.read.parquet(path)
-            .filter(F.col(BUCKET_COL).isin(buckets))
-            .withColumn("__src", F.lit(0))
-        )
-    else:
-        existing = ch.withColumn("__src", F.lit(0)).limit(0)
-    merged = existing.unionByName(ch.withColumn("__src", F.lit(1)))
-    # version DESC first (recency beats arrival), __src as the final
-    # tie-break so a change at an EQUAL version still replaces the stored
-    # row — the DO-UPDATE-on-conflict posture
-    w = Window.partitionBy(*pk).orderBy(
-        F.col(version_col).desc(), F.col("__src").desc()
-    )
-    return (
-        merged.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "__src")
-        .localCheckpoint()
-    )
+    (the same contract cdc_compact keeps); the materialized size is
+    bounded by the touched buckets' data, never the table."""
+    merged = _merge_on_pk(spark, path, ch, BUCKET_COL, buckets, pk, version_col)
+    return merged.localCheckpoint()
 
 
 def cdc_apply(
@@ -137,25 +124,11 @@ def cdc_apply(
     ch = _with_bucket(changes, pk, n_buckets).withColumn(
         TOMBSTONE_COL, F.col(op_col).eqNullSafe(F.lit(delete_op))
     ).drop(op_col)
-    # lazy checkpoint (r12): the change frame is consumed twice — the
-    # touched-bucket collect below and the survivor merge — and its
-    # lineage is the caller's change feed (a source re-read per
-    # consumption in a foreachBatch). The collect materializes the blocks
-    # once; the merge reuses them. Block footprint is the batch, not the
-    # table.
-    ch = ch.localCheckpoint(eager=False)
-    buckets = sorted(
-        r[BUCKET_COL] for r in ch.select(BUCKET_COL).distinct().collect()
-    )
+    ch, buckets = _touched_partitions(ch, BUCKET_COL)
     if not buckets:
         return []
     resolved = _resolve_survivors(spark, path, ch, buckets, pk, version_col)
-    # rebalance-by-bucket (r12): resolved leaves the PK window
-    # partitioned by hash(pk), so each task would write a file into
-    # every bucket it touches
-    resolved.hint("rebalance", BUCKET_COL).write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy(BUCKET_COL).parquet(path)
+    _overwrite_partitions(resolved, path, BUCKET_COL)
     return buckets
 
 
@@ -174,14 +147,15 @@ def cdc_compact(
     spark: SparkSession,
     path: str,
     version_horizon: int,
+    version_col: str = "version",
 ) -> int:
-    """Physically remove tombstones whose version ≤ ``version_horizon``
+    """Physically remove tombstones whose ``version_col`` ≤ ``version_horizon``
     — safe once the feed can no longer deliver a change older than the
     horizon (retention window / snapshot watermark). Rewrites only the
     buckets that actually hold purgeable tombstones (partition-pruned,
     like the apply path). Returns the number of rows purged."""
     t = spark.read.parquet(path)
-    purgeable = F.col(TOMBSTONE_COL) & (F.col("version") <= F.lit(version_horizon))
+    purgeable = F.col(TOMBSTONE_COL) & (F.col(version_col) <= F.lit(version_horizon))
     # per-bucket purgeable counts in ONE aggregate: the bucket list AND
     # n_purged both fall out of the same scan (r12 — the old shape paid a
     # second pruned scan just to count `scoped` for the purge tally;
@@ -204,11 +178,7 @@ def cdc_compact(
     remaining = scoped.filter(~purgeable).localCheckpoint()
     kept = {r[BUCKET_COL] for r in remaining.select(BUCKET_COL).distinct().collect()}
     if kept:
-        remaining.filter(F.col(BUCKET_COL).isin(sorted(kept))).hint(
-            "rebalance", BUCKET_COL
-        ).write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
-            BUCKET_COL
-        ).parquet(path)
+        _overwrite_partitions(remaining, path, BUCKET_COL)
     hconf = spark._jsc.hadoopConfiguration()
     for b in (b for b in buckets if b not in kept):
         jdir = spark._jvm.org.apache.hadoop.fs.Path(f"{path}/{BUCKET_COL}={b}")
@@ -251,21 +221,19 @@ def run_cdc_stream(
     # window + bucket rewrite otherwise fan out to the batch session's
     # core-count constant per batch; env-overridable via
     # LTSS_STREAM_STATE_PARTITIONS like every bounded-stream driver
-    from ltss_spark.session import scoped_conf
     from ltss_spark.streaming.windows import (
         SHUFFLE_PARTITIONS,
         bounded_source_state_partitions,
+        run_available_now,
     )
 
     n_parts = bounded_source_state_partitions(changes_dir)
-    with scoped_conf(spark, {SHUFFLE_PARTITIONS: n_parts}):
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", str(max_files_per_trigger))
-            .parquet(changes_dir)
-            .writeStream.foreachBatch(body)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-    q.awaitTermination()
+    run_available_now(
+        spark,
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", str(max_files_per_trigger))
+        .parquet(changes_dir)
+        .writeStream.foreachBatch(body)
+        .option("checkpointLocation", checkpoint),
+        {SHUFFLE_PARTITIONS: n_parts},
+    )

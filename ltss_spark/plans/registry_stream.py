@@ -759,6 +759,7 @@ def stream_snapshot_q(spark, sf_dir):
 
     from ltss_spark.operators.snapshot import make_snapshot_sink, read_version
     from ltss_spark.plans.registry import _t
+    from ltss_spark.streaming.windows import run_available_now
 
     base = scratch_dir("ltss_stream_snap")
     src = f"{base}/src"
@@ -777,16 +778,14 @@ def stream_snapshot_q(spark, sf_dir):
                         ("event_type", "string"), ("value", "double")])
     sink = make_snapshot_sink(f"{base}/table", app_id="stream_snapshot")
     for ck in ("ckpt1", "ckpt2"):  # second pass = replay, must be a no-op
-        q = (
+        run_available_now(
+            spark,
             spark.readStream.schema(schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
             .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", f"{base}/{ck}")
-            .trigger(availableNow=True)
-            .start()
+            .option("checkpointLocation", f"{base}/{ck}"),
         )
-        q.awaitTermination()
     return read_version(spark, f"{base}/table").select(*cols)
 
 

@@ -290,6 +290,15 @@ def write_partitioned(
 _STATS_DIR = "_bucket_stats"
 
 
+def _path_exists(spark: SparkSession, path: str) -> bool:
+    """Hadoop-FS existence check (s3a/hdfs/local alike). The writers branch
+    on THIS, never on a caught read error: a broad try/except would turn a
+    transient error or one corrupt footer into "nothing there", and the
+    overwrite that follows would silently replace the real contents."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath)
+
+
 def write_bucket_stats(
     spark: SparkSession,
     path: str,
@@ -332,18 +341,17 @@ def write_bucket_stats(
         "unit", F.lit(unit)
     )
     stats_path = f"{path}/{_STATS_DIR}"
-    if months is not None:
-        try:
-            kept = (
-                spark.read.parquet(stats_path)
-                .filter(~F.date_format("bucket", bucket_fmt).isin(list(months)))
-                # materialize BEFORE the overwrite deletes the files the
-                # lazy plan reads
-                .localCheckpoint()
-            )
-            fresh = kept.unionByName(fresh)
-        except Exception:
-            pass  # no sidecar yet -> fresh covers the touched months only
+    # no sidecar yet -> fresh covers the touched months only; an unreadable
+    # sidecar raises instead of being overwritten with the touched months
+    if months is not None and _path_exists(spark, stats_path):
+        kept = (
+            spark.read.parquet(stats_path)
+            .filter(~F.date_format("bucket", bucket_fmt).isin(list(months)))
+            # materialize BEFORE the overwrite deletes the files the
+            # lazy plan reads
+            .localCheckpoint()
+        )
+        fresh = kept.unionByName(fresh)
     fresh.write.mode("overwrite").parquet(stats_path)
 
 
@@ -375,13 +383,13 @@ def drop_partitions(
     (write_bucket_stats), the dropped months' rows are pruned from it
     too, so a sidecar-driven refresh_rollup sees the deletion as stale
     buckets instead of trusting stale metadata. Returns dropped keys."""
+    if not _path_exists(spark, path):
+        return []
     jvm = spark._jvm
     jpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
     prefix = f"{partition_col}="
     dropped: list[str] = []
-    if not fs.exists(jpath):
-        return dropped
     for status in fs.listStatus(jpath):
         name = status.getPath().getName()
         if status.isDirectory() and name.startswith(prefix):
@@ -389,28 +397,26 @@ def drop_partitions(
             if key < before:
                 fs.delete(status.getPath(), True)
                 dropped.append(key)
-    if dropped:
-        stats_path = f"{path}/{_STATS_DIR}"
-        try:
-            stats = spark.read.parquet(stats_path)
-            units = {r["unit"] for r in stats.select("unit").distinct().collect()} \
-                if "unit" in stats.columns else {None}
-            if units & {"year", "quarter"}:
-                # a coarser-than-month bucket spans dropped AND surviving
-                # months — month-scoped pruning would keep a fingerprint
-                # that no longer matches the surviving slice. Stale
-                # metadata is worse than none: drop the sidecar; the next
-                # write_bucket_stats (or a scan-based refresh) rebuilds it.
-                fs.delete(jvm.org.apache.hadoop.fs.Path(stats_path), True)
-            else:
-                kept = (
-                    stats.filter(
-                        ~F.date_format("bucket", bucket_fmt).isin(dropped)
-                    ).localCheckpoint()  # materialize before the overwrite
-                )
-                kept.write.mode("overwrite").parquet(stats_path)
-        except Exception:
-            pass  # no sidecar — nothing to prune
+    stats_path = f"{path}/{_STATS_DIR}"
+    # no sidecar -> nothing to prune; an unreadable one raises
+    if dropped and _path_exists(spark, stats_path):
+        stats = spark.read.parquet(stats_path)
+        units = {r["unit"] for r in stats.select("unit").distinct().collect()} \
+            if "unit" in stats.columns else {None}
+        if units & {"year", "quarter"}:
+            # a coarser-than-month bucket spans dropped AND surviving
+            # months — month-scoped pruning would keep a fingerprint
+            # that no longer matches the surviving slice. Stale
+            # metadata is worse than none: drop the sidecar; the next
+            # write_bucket_stats (or a scan-based refresh) rebuilds it.
+            fs.delete(jvm.org.apache.hadoop.fs.Path(stats_path), True)
+        else:
+            kept = (
+                stats.filter(
+                    ~F.date_format("bucket", bucket_fmt).isin(dropped)
+                ).localCheckpoint()  # materialize before the overwrite
+            )
+            kept.write.mode("overwrite").parquet(stats_path)
     return sorted(dropped)
 
 
@@ -547,70 +553,17 @@ def upsert_partitioned(
     data; the merge is one shuffle on the PK, co-located with the month
     partitioning.
     """
-    upd = updates.withColumn("month", F.date_format(F.col(time_col), bucket_fmt))
-    # lazy checkpoint (r12): the update frame is consumed twice — the
-    # touched-month collect and the PK merge — and its lineage is the
-    # caller's delta (recomputed per consumption otherwise, e.g. a
-    # foreachBatch source re-read). The collect materializes the blocks
-    # once; the merge reuses them. Block footprint is the delta.
-    upd = upd.localCheckpoint(eager=False)
-    months = [r["month"] for r in upd.select("month").distinct().collect()]
+    upd, months = _touched_partitions(
+        updates.withColumn("month", F.date_format(F.col(time_col), bucket_fmt)), "month"
+    )
     if not months:
         return []
-    # explicit existence check (Hadoop FS, so s3/hdfs paths work too):
-    # ONLY a missing target takes the first-write branch. A broad
-    # try/except here would turn a transient read error or one corrupt
-    # footer into "table is empty" — and the dynamic overwrite below would
-    # then silently replace every touched month with just the update rows.
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if fs.exists(jpath):
-        existing = (
-            spark.read.parquet(path)
-            .filter(F.col("month").isin(months))
-            .withColumn("__src", F.lit(0))
-        )
-    else:
-        # first write: upsert degrades to a plain insert (the streaming
-        # sink's first micro-batch takes this path)
-        existing = upd.withColumn("__src", F.lit(0)).limit(0)
-    merged = existing.unionByName(upd.withColumn("__src", F.lit(1)))
-    # tie_breaker FIRST, then __src (ADVICE r3): the newest row by the
-    # caller's monotonic column must win regardless of which batch carried
-    # it — a late/out-of-order micro-batch replaying an OLD event must not
-    # regress a PK that already holds a newer row. __src remains the final
-    # tie-break so an update with an EQUAL tie_breaker value still replaces
-    # the existing row (the reference's DO UPDATE overwrites on conflict).
-    # Without a tie_breaker there is no recency signal and updates win
-    # outright — the plain ON CONFLICT semantic.
-    order = (
-        [F.col(tie_breaker).desc(), F.col("__src").desc()]
-        if tie_breaker
-        else [F.col("__src").desc()]
-    )
-    w = Window.partitionBy(*pk).orderBy(*order)
-    resolved = (
-        merged.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "__src")
-    )
+    resolved = _merge_on_pk(spark, path, upd, "month", months, pk, tie_breaker)
     # same layout rule as write_partitioned: entity-sorted when the
     # column exists, plain otherwise (the pk is parameterized — don't
     # assume the ltss schema)
-    # same rebalance-by-month rule as write_partitioned: the merged
-    # frame leaves the PK window partitioned by hash(pk), so an
-    # unhinted write fans every task across every touched month
-    resolved = resolved.hint("rebalance", "month")
-    out = (
-        resolved.sortWithinPartitions("entity_id", time_col)
-        if "entity_id" in resolved.columns
-        else resolved
-    )
-    # per-write dynamic overwrite: only the touched months are replaced,
-    # and the session's partitionOverwriteMode is never changed
-    out.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
-        "month"
-    ).parquet(path)
+    sort_cols = ("entity_id", time_col) if "entity_id" in resolved.columns else ()
+    _overwrite_partitions(resolved, path, "month", sort_cols)
     if stats_unit is not None:
         # incremental sidecar maintenance: fingerprints recomputed only for
         # the touched months (a column-pruned, partition-pruned re-read of
@@ -622,7 +575,83 @@ def upsert_partitioned(
             time_col=time_col,
             unit=stats_unit,
             sig_cols=stats_sig_cols,
-            months=sorted(months),
+            months=months,
             bucket_fmt=bucket_fmt,
         )
-    return sorted(months)
+    return months
+
+
+def _touched_partitions(updates: DataFrame, part_col: str) -> tuple[DataFrame, list]:
+    """``updates`` checkpointed for reuse, and the sorted ``part_col`` keys
+    it touches."""
+    # lazy checkpoint (r12): the update frame is consumed twice — the
+    # touched-key collect and the merge — and its lineage is the caller's
+    # delta (recomputed per consumption otherwise, e.g. a foreachBatch
+    # source re-read). The collect materializes the blocks once; the merge
+    # reuses them. Block footprint is the delta, not the table.
+    upd = updates.localCheckpoint(eager=False)
+    return upd, sorted(r[part_col] for r in upd.select(part_col).distinct().collect())
+
+
+def _merge_on_pk(
+    spark: SparkSession,
+    path: str,
+    updates: DataFrame,
+    part_col: str,
+    keys: list,
+    pk: tuple[str, ...],
+    order_col: str | None,
+) -> DataFrame:
+    """The keyed merge behind every partitioned writer — the reference's
+    ``ON CONFLICT (pk) DO UPDATE`` (models.py:31-32) as one per-PK window
+    over existing ∪ updates, read back only from the ``part_col``
+    partitions ``keys`` (the partitions the updates touch: months for
+    upsert_partitioned, hash buckets for operators.cdc.cdc_apply).
+
+    Survivor per PK: ``order_col`` DESC first, so the newest row by the
+    caller's monotonic column wins regardless of which batch carried it —
+    a late replay of an OLD row can never regress a PK (ADVICE r3). Then
+    updates before existing rows, so an update at an EQUAL ``order_col``
+    still replaces the stored row (DO UPDATE overwrites on conflict); with
+    ``order_col`` None that is the whole rule.
+
+    Returns the LAZY resolved frame, still carrying ``part_col``. Its plan
+    reads ``path``; a caller that must not read what it is overwriting
+    materializes it first."""
+    if _path_exists(spark, path):
+        existing = (
+            spark.read.parquet(path)
+            .filter(F.col(part_col).isin(keys))
+            .withColumn("__src", F.lit(0))
+        )
+    else:
+        # first write: the merge degrades to a plain insert (a streaming
+        # sink's first micro-batch takes this path)
+        existing = updates.withColumn("__src", F.lit(0)).limit(0)
+    merged = existing.unionByName(updates.withColumn("__src", F.lit(1)))
+    order = [F.col(order_col).desc()] if order_col else []
+    w = Window.partitionBy(*pk).orderBy(*order, F.col("__src").desc())
+    return (
+        merged.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn", "__src")
+    )
+
+
+def _overwrite_partitions(
+    df: DataFrame, path: str, part_col: str, sort_cols: tuple[str, ...] = ()
+) -> None:
+    """Replace exactly the ``part_col`` partitions ``df`` holds rows for.
+
+    Rebalance by the partition column first (the write_partitioned rule):
+    a merged frame leaves its PK window partitioned by hash(pk), so an
+    unhinted write fans every task across every touched partition. The
+    dynamic overwrite is a per-write option — the session's
+    partitionOverwriteMode is never changed. A partition ``df`` holds no
+    rows for is left as it is."""
+    out = df.hint("rebalance", part_col)
+    if sort_cols:
+        out = out.sortWithinPartitions(*sort_cols)
+    out.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
+        part_col
+    ).parquet(path)

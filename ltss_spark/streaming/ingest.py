@@ -384,10 +384,10 @@ def run_ingest_availablenow(
     import fnmatch
     import os
 
-    from ltss_spark.session import scoped_conf
     from ltss_spark.streaming.windows import (
         SHUFFLE_PARTITIONS,
         bounded_source_state_partitions,
+        run_available_now,
     )
 
     # size from the files the stream reads only: source_dir holds every
@@ -401,14 +401,11 @@ def run_ingest_availablenow(
         )
     )
     # held across start() only: the query's cloned session keeps the count
-    with scoped_conf(spark, {SHUFFLE_PARTITIONS: n_parts}):
-        q = (
-            states.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-    q.awaitTermination()
+    run_available_now(
+        spark,
+        states.writeStream.foreachBatch(sink).option("checkpointLocation", checkpoint),
+        {SHUFFLE_PARTITIONS: n_parts},
+    )
 
 
 def streaming_bucket_counts(

@@ -192,21 +192,19 @@ def run_streaming_near_dup(
     # (r13, guide §2): micro-batches are single small files here and the
     # foreachBatch body's plans run without AQE coalescing help at the
     # fan-out stage; sized from the bounded source, env-overridable
-    from ltss_spark.session import scoped_conf
     from ltss_spark.streaming.windows import (
         SHUFFLE_PARTITIONS,
         bounded_source_state_partitions,
+        run_available_now,
     )
 
     n_parts = bounded_source_state_partitions(docs_dir)
-    with scoped_conf(spark, {SHUFFLE_PARTITIONS: n_parts}):
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", str(max_files_per_trigger))
-            .parquet(docs_dir)
-            .writeStream.foreachBatch(body)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-    q.awaitTermination()
+    run_available_now(
+        spark,
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", str(max_files_per_trigger))
+        .parquet(docs_dir)
+        .writeStream.foreachBatch(body)
+        .option("checkpointLocation", checkpoint),
+        {SHUFFLE_PARTITIONS: n_parts},
+    )

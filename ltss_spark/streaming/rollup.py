@@ -24,7 +24,12 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ltss_spark.functions.numeric import davg
 from ltss_spark.ingest import states_from_events
-from ltss_spark.sources.batch import normalize_event_times
+from ltss_spark.streaming.windows import (
+    SHUFFLE_PARTITIONS,
+    bounded_events_stream,
+    bounded_source_state_partitions,
+    run_available_now,
+)
 
 #: rollup metrics, shared by the streaming maintainer and the batch oracle
 _METRICS = ("n_events", "avg_state", "min_state", "max_state")
@@ -40,14 +45,7 @@ def maintain_rollup_availablenow(
     """Drive the continuous aggregate over the (bounded) event stream:
     update-mode windowed aggregation -> foreachBatch appends changed rows
     stamped with the epoch, partitioned by day."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{source_dir}/events.parquet").schema
-    raw = normalize_event_times(
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(source_dir)
-    )
-    states = states_from_events(raw)
+    states = states_from_events(bounded_events_stream(spark, source_dir))
     v = F.col("state").try_cast("double")
     agg = (
         states.withWatermark("time", "1 hour")
@@ -79,22 +77,14 @@ def maintain_rollup_availablenow(
     # aggregation keeps one state-store instance per shuffle partition and
     # streaming has no AQE to coalesce — sized from the bounded source
     # instead of the batch session's core-count constant
-    from ltss_spark.session import scoped_conf
-    from ltss_spark.streaming.windows import (
-        SHUFFLE_PARTITIONS,
-        bounded_source_state_partitions,
-    )
-
     n_parts = bounded_source_state_partitions(f"{source_dir}/events.parquet")
-    with scoped_conf(spark, {SHUFFLE_PARTITIONS: n_parts}):
-        q = (
-            agg.writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-    q.awaitTermination()
+    run_available_now(
+        spark,
+        agg.writeStream.foreachBatch(sink)
+        .outputMode("update")
+        .option("checkpointLocation", checkpoint),
+        {SHUFFLE_PARTITIONS: n_parts},
+    )
 
 
 def read_rollup(spark: SparkSession, base: str) -> DataFrame:

@@ -25,6 +25,7 @@ import uuid
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter
 
 from ltss_spark.session import scoped_conf
 from ltss_spark.sources.batch import normalize_event_times
@@ -128,6 +129,25 @@ def bounded_events_stream(spark: SparkSession, source_dir: str) -> DataFrame:
     )
 
 
+def run_available_now(
+    spark: SparkSession, writer: DataStreamWriter, start_conf: dict | None = None
+) -> None:
+    """Run a bounded stream to completion: ``writer`` starts with
+    ``Trigger.AvailableNow`` and this call returns once every input
+    available at start has been processed.
+
+    ``start_conf`` overrides session conf for the ``.start()`` only
+    (:func:`ltss_spark.session.scoped_conf`): the query clones the session
+    there, so e.g. ``{SHUFFLE_PARTITIONS: bounded_source_state_partitions(...)}``
+    fixes the state-store partition count for the checkpoint's lifetime,
+    while the session itself is restored before the query runs — the
+    override is never held across ``awaitTermination``, so queries other
+    threads plan meanwhile see the session's own values."""
+    with scoped_conf(spark, start_conf or {}):
+        q = writer.trigger(availableNow=True).start()
+    q.awaitTermination()
+
+
 def run_to_memory(
     df: DataFrame,
     output_mode: str,
@@ -137,23 +157,16 @@ def run_to_memory(
     """Run a bounded streaming query to completion through a memory sink and
     return the finished result as a batch DataFrame.
 
-    ``start_conf`` overrides session conf for the query's ``.start()`` only
-    (:func:`ltss_spark.session.scoped_conf`): the query clones the session
-    there, so e.g. ``{SHUFFLE_PARTITIONS: bounded_source_state_partitions(...)}``
-    fixes the state-store partition count for the checkpoint's lifetime —
-    for these bounded one-shot runs, exactly this call — while the session
-    itself is restored before the query runs."""
+    ``start_conf`` is the start-time override of :func:`run_available_now`;
+    for these bounded one-shot runs the checkpoint's lifetime is exactly
+    this call."""
     spark = df.sparkSession
     name = f"{name_hint}_{uuid.uuid4().hex[:12]}"
-    with scoped_conf(spark, start_conf or {}):
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-    q.awaitTermination()
+    run_available_now(
+        spark,
+        df.writeStream.format("memory").queryName(name).outputMode(output_mode),
+        start_conf,
+    )
     return spark.table(name)
 
 

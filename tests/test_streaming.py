@@ -426,7 +426,7 @@ def test_rollup_incremental_across_batches_and_compaction(spark):
     import os
 
     from ltss_spark.ingest import states_from_events
-    from ltss_spark.sources.batch import load_table
+    from ltss_spark.sources.batch import load_table, normalize_event_times
     from ltss_spark.streaming.rollup import (
         _METRICS,
         compact_rollup,
@@ -453,16 +453,14 @@ def test_rollup_incremental_across_batches_and_compaction(spark):
             os.utime(p, (t, t))
 
     # stream with one file per trigger so hour-buckets get UPDATED in batch 2
-    import ltss_spark.streaming.rollup as R
-
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = spark.read.parquet(f"{src}/a.parquet").schema
-    raw = R.normalize_event_times(
+    raw = normalize_event_times(
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(f"{src}/*.parquet")
     )
-    states = R.states_from_events(raw)
+    states = states_from_events(raw)
     v = F.col("state").try_cast("double")
     agg = (
         states.withWatermark("time", "1 hour")

@@ -169,6 +169,62 @@ def test_coarse_unit_stats_guards(spark):
         read_bucket_stats(spark, out).collect()
 
 
+def _three_months_with_corrupt_sidecar(spark):
+    """A day-granular table over 2024-01..03 whose fingerprint sidecar
+    has one unreadable file (its bytes replaced, checksum removed)."""
+    import datetime as dt
+
+    from ltss_spark.sources.batch import write_partitioned
+
+    rows = [(i, dt.datetime(2024, 1 + i % 3, 5, 12, 0, i), float(i)) for i in range(30)]
+    df = spark.createDataFrame(rows, "event_id long, ts timestamp, value double")
+    out = f"{tempfile.gettempdir()}/sidecar_{uuid.uuid4().hex}"
+    write_partitioned(df, out, time_col="ts", stats_unit="day",
+                      stats_sig_cols=["event_id", "value"])
+    stats_dir = os.path.join(out, "_bucket_stats")
+    part = sorted(glob.glob(os.path.join(stats_dir, "part-*.parquet")))[0]
+    with open(part, "wb") as f:
+        f.write(b"not a parquet file")
+    for crc in glob.glob(os.path.join(stats_dir, ".*.crc")):
+        os.remove(crc)
+    return out
+
+
+def test_upsert_raises_on_unreadable_sidecar(spark):
+    """Only a MISSING sidecar means "no sidecar yet". An unreadable one
+    must fail the upsert: swallowing the read error would rewrite the
+    sidecar with the touched month's buckets alone, silently dropping every
+    other month's fingerprints."""
+    import datetime as dt
+
+    import pytest
+
+    from ltss_spark.sources.batch import upsert_partitioned
+
+    out = _three_months_with_corrupt_sidecar(spark)
+    upd = spark.createDataFrame(
+        [(2, dt.datetime(2024, 3, 5, 12, 0, 2), 99.0)],
+        "event_id long, ts timestamp, value double",
+    )
+    with pytest.raises(Exception, match="_bucket_stats"):
+        upsert_partitioned(spark, out, upd, pk=("event_id",), time_col="ts",
+                           tie_breaker=None, stats_unit="day",
+                           stats_sig_cols=["event_id", "value"])
+
+
+def test_drop_partitions_raises_on_unreadable_sidecar(spark):
+    """Retention must not treat an unreadable sidecar as "no sidecar":
+    the pruning step raises instead of leaving the dropped months'
+    fingerprints in place unnoticed."""
+    import pytest
+
+    from ltss_spark.sources.batch import drop_partitions
+
+    out = _three_months_with_corrupt_sidecar(spark)
+    with pytest.raises(Exception, match="_bucket_stats"):
+        drop_partitions(spark, out, before="2024-02")
+
+
 def test_case_tree_bucket_matches_hof_count(spark):
     """r13: the binary-search CASE tree replacing the interpreted
     filter-HOF must produce the identical bucket id for every input —
