@@ -1,9 +1,10 @@
 """Oracle-parity checker — a local mirror of the driver's correctness gate
 (row-count + column names + order-insensitive values vs DuckDB on the same
-parquet, see /root/repo/__spark_entry__.py docstring).
+parquet, see the ``__spark_entry__.py`` docstring).
 
-Used by tests/test_oracle_parity.py and scripts; running it at sf0.001
-before every commit is how we keep CORRECTNESS_r{N}.json green.
+Used by tests/test_oracle_parity.py and scripts. The parity gate is
+tier-1 ``test_oracle_parity`` plus ``make parity``
+(``scripts/check_parity.py``), both over every registry entry at sf0.001.
 """
 
 from __future__ import annotations

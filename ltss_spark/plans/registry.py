@@ -76,349 +76,14 @@ def register(name: str, oracle: str | None, survey: str = ""):
     return deco
 
 
-# ---------------------------------------------------------------------------
-# Driver CORRECTNESS-window priority.
-#
-# The per-round driver check covers roughly the first 50 `queries()` entries
-# in dict order. After the r12 window, every entry has a green driver row
-# (staleness distribution r7:8 r8:42 r9:46 r10:45 r11:50 r12:50 before this
-# round's reorder). Round 13 is an OPTIMIZATION round: the window leads
-# with the 18 entries whose implementation materially changed this round
-# (the `_CHANGED_ENTRIES` comment inside the list itemizes the changes),
-# then drains staleness oldest-first exactly as VERDICT r12 item 7 asked —
-# the 8 r7-cohort carryovers from the head of last round's _DRIVER_SECOND,
-# then the oldest 24 of the r8 cohort. _DRIVER_SECOND continues strictly
-# least-recently-verified-first, so the window never re-checks fresh
-# surface while stale surface waits.
-# ---------------------------------------------------------------------------
-
-_DRIVER_PRIORITY: list[str] = [
-    # --- materially CHANGED in round 13 (justify a window slot like
-    # never-verified entries, tests/test_plans.py packing guard):
-    # ext_sim_search_lsh — probe-side signatures now a driver-computed
-    # LocalTableScan; the stream_* family — input-derived state-store
-    # partition count (bounded_source_state_partitions) + single-job
-    # micro-batch fixture staging (stage_batches); stream_tws_ooo
-    # additionally rides its watermark-punctuation sentinels in the
-    # final data batch; stream_ingest/stream_upsert — the availableNow
-    # ingest scopes its shuffle partitions the same way; stream_cdc and
-    # stream_rollup — their foreachBatch drivers gained the same scoped
-    # partition sizing (plus cdc_apply's eqNullSafe tombstone
-    # normalization, value-preserving for the registered all-'U'/'D'
-    # feed) and stream_cdc/stream_dedup_near now stage their change
-    # files through stage_batches. (scan_stream only saw a no-op
-    # signature default on run_to_memory.)
-    "ext_sim_search_lsh",
-    "stream_ingest",
-    "stream_upsert",
-    "stream_stateful",
-    "stream_changepoint",
-    "stream_gap_close",
-    "stream_tws_totals",
-    "stream_tws_ooo",
-    "stream_distinct_state",
-    "stream_list_state",
-    "stream_state_bootstrap",
-    "stream_join",
-    "stream_dedup",
-    "stream_late_drop",
-    "stream_watermark",
-    "stream_window_tumbling",
-    "stream_window_sliding",
-    "stream_window_session",
-    "stream_cdc",
-    "stream_rollup",
-    # --- staleness drain: the 7 remaining r7-cohort carryovers displaced
-    # from the r12 window (VERDICT r12 item 7: these go first; the 8th,
-    # stream_cdc, moved into the changed block above), then the oldest
-    # 23 of the r8 cohort ---
-    "sort_nulls",
-    "sql_subquery",
-    "stream_dedup_near",
-    "topk_group",
-    "ts_seasonal_anomaly",
-    "win_cumulative",
-    "win_distribution",
-    "agg_approx",
-    "agg_percentile",
-    "agg_sketch_rollup",
-    "ddl_migrate",
-    "ddl_upgrade",
-    "ext_dedup_cluster",
-    "ext_dedup_minhash",
-    "ext_dedup_minhash_verified",
-    "ext_dedup_pipeline",
-    "ext_fingerprint",
-    "ext_lang_dist",
-    "ext_langid",
-    "ext_multimodal_audio",
-    "ext_multimodal_frames",
-    "ext_multimodal_resize",
-    "ext_perplexity_buckets",
-    "ext_text_quality",
-    "ext_token_topk",
-    "ext_url_canonical",
-    "ltss_attr_materialize",
-    "ltss_deadletter",
-    "ltss_entity_range",
-    "ltss_geo_ingest",
-]
-
-#: entries with a PRE-existing driver row whose implementation changed
-#: materially this round — they justify a window slot exactly like a
-#: never-verified entry (tests/test_plans.py window-packing guard).
-#: Enumerated, not sliced from _DRIVER_PRIORITY: stream_dedup_near
-#: (stage_batches staging, scoped stream partitions) sits in the drain
-#: block and is changed all the same.
-_CHANGED_ENTRIES: set[str] = {
-    "ext_sim_search_lsh",
-    "stream_ingest",
-    "stream_upsert",
-    "stream_stateful",
-    "stream_changepoint",
-    "stream_gap_close",
-    "stream_tws_totals",
-    "stream_tws_ooo",
-    "stream_distinct_state",
-    "stream_list_state",
-    "stream_state_bootstrap",
-    "stream_join",
-    "stream_dedup",
-    "stream_late_drop",
-    "stream_watermark",
-    "stream_window_tumbling",
-    "stream_window_sliding",
-    "stream_window_session",
-    "stream_cdc",
-    "stream_rollup",
-    "stream_dedup_near",
-}
-
-# Entries with an existing green driver row; least-recently-verified first
-# (r8 remainder, then r9, r10, r11, then the r12-verified cohort) — any
-# window wider than the priority block re-confirms the stalest surface
-# next. Names materially changed this round were pulled forward into the
-# priority block above.
-_DRIVER_SECOND: list[str] = [
-    # --- latest driver row: round 8 (remainder after the drain above) ---
-    "ltss_json_attr",
-    "ltss_json_contains",
-    "ltss_state_transitions",
-    "scan_stream",
-    "sink_append",
-    "sink_optimize",
-    "sql_select",
-    "stream_kafka_decode",
-    "stream_kafka_roundtrip",
-    "ts_changepoint_cusum",
-    "ts_counter_delta",
-    "ts_interpolate",
-    "ts_m4",
-    "ts_timeweight",
-    "win_frame",
-    "win_ntile",
-    "win_range_frame",
-    "win_rank",
-    # --- latest driver row: round 9 ---
-    "agg_corr",
-    "agg_median_exact",
-    "agg_mode",
-    "ext_bm25",
-    "ext_chunk_docs",
-    "ext_contamination",
-    "ext_dedup_cluster_embed",
-    "ext_dedup_embed",
-    "ext_dedup_exact",
-    "ext_dedup_incremental",
-    "ext_dedup_ngram",
-    "ext_dedup_simhash",
-    "ext_dedup_span_remove",
-    "ext_hash_split",
-    "ext_pagerank",
-    "ext_pii_redact",
-    "ext_sim_search_ivf",
-    "join_asof_fwd",
-    "join_asof_near",
-    "ltss_compress",
-    "ltss_geo_wkt",
-    "ltss_retention",
-    "ltss_state_periods",
-    "sink_bucketed",
-    "sink_compact",
-    "sink_zorder",
-    "sql_q10",
-    "sql_q13",
-    "sql_q14",
-    "sql_q15",
-    "sql_q16",
-    "sql_q17",
-    "sql_q18",
-    "sql_q2",
-    "sql_q21",
-    "sql_q22",
-    "sql_q4",
-    "ts_heartbeat",
-    "ts_histogram",
-    "ts_lttb",
-    "ts_trend",
-    # --- latest driver row: round 10 ---
-    "ext_bigram_lm",
-    "ext_dedup_semantic_kmeans",
-    "ext_multimodal",
-    "ext_nb_confusion",
-    "ext_nb_score",
-    "ext_nb_train",
-    "ext_pack_sequences",
-    "ext_pmi",
-    "ext_quality_filter",
-    "ext_sim_search",
-    "ext_text_stats",
-    "ext_tfidf",
-    "ext_unigram_lm",
-    "geo_bbox_join",
-    "geo_distance",
-    "join_asof",
-    "join_skew_salted",
-    "ltss_attr_keys",
-    "ltss_bucket",
-    "ltss_latest",
-    "ltss_snapshot",
-    "scan_jdbc",
-    "sink_partitioned",
-    "sink_upsert",
-    "sql_q1",
-    "sql_q11",
-    "sql_q19",
-    "sql_q20",
-    "sql_q3",
-    "sql_q5",
-    "sql_q6",
-    "ts_gapfill",
-    "ts_sessionize",
-    "udaf",
-    "udf_scalar",
-    "udtf",
-    "win_time_range",
-    # --- latest driver row: round 11 ---
-    "ext_dedup_containment",
-    "ext_setsim_join",
-    "ext_triangle_count",
-    "ext_graph_bfs",
-    "ext_corpus_drift",
-    "ext_skipgram",
-    "agg_theta_overlap",
-    "diag_skew",
-    "ext_dedup_cdf",
-    "ext_dedup_embed_capped",
-    "ext_dedup_spans",
-    "ext_knn_join",
-    "ext_knn_join_ivf",
-    "ext_mixture_sample",
-    "ext_repetition",
-    "ext_sample_group",
-    "ext_shuffle_shard",
-    "ext_sim_search_ivfpq",
-    "ext_sim_search_pq",
-    "ext_token_topk_approx",
-    "fn_date",
-    "join_bloom",
-    "join_full",
-    "join_left",
-    "join_range",
-    "join_right",
-    "ltss_cagg_ivm",
-    "ltss_cagg_refresh",
-    "ltss_cagg_stats_refresh",
-    "ltss_timeinstate",
-    "ltss_uptime",
-    "project",
-    "scan_corrupt_tolerant",
-    "scan_csv",
-    "scan_json",
-    "scan_orc",
-    "scan_parquet",
-    "sink_pruned_read",
-    "sink_version_diff",
-    "sink_versioned",
-    "sql_q12",
-    "sql_q7",
-    "sql_q8",
-    "sql_q9",
-    "ext_lr_train",
-    "ext_lr_score",
-    "ext_lr_calibration",
-    "ext_bpe_train",
-    "ext_bpe_encode",
-    # --- latest driver row: round 12 (the freshest cohort: the two
-    # r12-new entries, the r6 carryover drained that round, and 41 of
-    # the r7 cohort) ---
-    "ext_graph_lpa",
-    "ext_dedup_suffix",
-    "stream_snapshot",
-    "ts_cohort",
-    "ts_ewma",
-    "ts_funnel",
-    "ts_ohlc",
-    "ts_outliers",
-    "win_lag_lead",
-    "agg_basic",
-    "agg_collect",
-    "agg_distinct",
-    "agg_first_last",
-    "agg_groupsets",
-    "agg_minmax_by",
-    "agg_pivot",
-    "agg_skew_distinct",
-    "agg_unpivot",
-    "ext_cluster_balance",
-    "ext_dedup_semantic",
-    "ext_hybrid_rrf",
-    "ext_importance_resample",
-    "ext_token_budget_mix",
-    "ext_vocab_encode",
-    "filter_basic",
-    "filter_entity",
-    "filter_in",
-    "filter_like",
-    "filter_not_in",
-    "filter_null",
-    "fn_array",
-    "fn_conditional",
-    "fn_fuzzy",
-    "fn_json",
-    "fn_map",
-    "fn_math",
-    "fn_string",
-    "join_anti",
-    "join_broadcast",
-    "join_inner",
-    "join_interval",
-    "join_semi",
-    "join_theta",
-    "limit",
-    "ltss_bucket_origin",
-    "ltss_states",
-    "set_except",
-    "set_intersect",
-    "set_union",
-    "sort",
-]
-
-
-def _ordered() -> list[Q]:
-    rank = {n: i for i, n in enumerate(_DRIVER_PRIORITY)}
-    rank.update({n: len(rank) + i for i, n in enumerate(_DRIVER_SECOND)})
-    head = sorted((q for q in REGISTRY if q.name in rank), key=lambda q: rank[q.name])
-    tail = [q for q in REGISTRY if q.name not in rank]
-    return head + tail
-
-
 def queries() -> dict[str, Build]:
-    return {q.name: q.build for q in _ordered()}
+    """Every entry in registration order (the import order of
+    ``ltss_spark.plans``); ``oracle_sql()`` keeps the same order."""
+    return {q.name: q.build for q in REGISTRY}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {q.name: q.oracle for q in _ordered() if q.oracle is not None}
+    return {q.name: q.oracle for q in REGISTRY if q.oracle is not None}
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

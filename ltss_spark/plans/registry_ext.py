@@ -2476,7 +2476,10 @@ def _pagerank_oracle(iters: int = 5, damping: float = 0.85) -> str:
     arithmetic (contribution = rank_n // deg, blend = (s*damp_ppm) //
     1e6) — no float rounding anywhere, so no repr-tie hazard (ADVICE
     r8); the one double is the final CAST/1e9, per-row IEEE and
-    bit-equal to the Spark loop at any partitioning."""
+    bit-equal to the Spark loop at any partitioning. The shared graph
+    CTEs are MATERIALIZED: inlined, DuckDB re-expands them inside every
+    unrolled rank CTE, and the query takes over a minute instead of
+    about a second at sf0.001."""
     damp_ppm = round(damping * 10**6)
     base_mass = 10**9 * (10**6 - damp_ppm) // 10**6
     its = []
@@ -2499,20 +2502,20 @@ def _pagerank_oracle(iters: int = 5, damping: float = 0.85) -> str:
         prev = f"r{k}"
     return f"""
     WITH {_minhash_banded_ctes(12, 4)},
-    cand AS (
+    cand AS MATERIALIZED (
       SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
       FROM banded a
       JOIN banded b ON a.band = b.band AND a.band_sig = b.band_sig
                    AND a.doc_id < b.doc_id
     ),
-    sym AS (
+    sym AS MATERIALIZED (
       SELECT doc_a AS u, doc_b AS v FROM cand
       UNION
       SELECT doc_b AS u, doc_a AS v FROM cand
     ),
-    deg AS (SELECT u, COUNT(*) AS deg FROM sym GROUP BY u),
-    nodes AS (SELECT u AS node FROM deg),
-    nn AS (SELECT COUNT(*) AS n FROM nodes),
+    deg AS MATERIALIZED (SELECT u, COUNT(*) AS deg FROM sym GROUP BY u),
+    nodes AS MATERIALIZED (SELECT u AS node FROM deg),
+    nn AS MATERIALIZED (SELECT COUNT(*) AS n FROM nodes),
     r0 AS (
       SELECT node,
              CAST(1000000000 // (SELECT n FROM nn) AS BIGINT) AS rank_n

@@ -34,9 +34,9 @@ def _row_passed(row) -> bool:
 
 def last_checked_rounds() -> dict[str, int]:
     """entry name -> highest round whose CORRECTNESS_r{N}.json contains a
-    PASSING row for it (the driver window rotates ~50 entries per round;
-    this is the staleness telemetry VERDICT r11 item 7 asks for — visible
-    without replaying the JSON files by hand)."""
+    PASSING row for it (the per-round driver check covered ~50 entries a
+    round through r13; this keeps that history visible without replaying
+    the JSON files by hand)."""
     latest: dict[str, int] = {}
     for path in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")):
         m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
@@ -61,11 +61,11 @@ def main() -> None:
     print("# Operator coverage — SURVEY.md §2 inventory → `queries()` entries")
     print()
     print("Generated by `scripts/coverage_table.py` from the live registry.")
-    print("`oracle` = hash-checked against DuckDB SQL at sf0.01 by the")
-    print("driver (rows-only entries are approximate/stateful ops whose")
-    print("exactness or recall is pinned by pytest instead). `last_checked`")
-    print("= the most recent driver round whose CORRECTNESS window included")
-    print("the entry (`new` = registered this round, first check pending).")
+    print("`oracle` = hash-checked against DuckDB SQL at sf0.001 by tier-1")
+    print("`test_oracle_parity` and `make parity` (rows-only entries are")
+    print("approximate/stateful ops pinned by pytest instead). `last_checked` =")
+    print("the latest per-round driver check (r1-r13, since retired) with a")
+    print("passing `CORRECTNESS_r{N}.json` row for the entry (`new` = no such row).")
     print()
     print("| # | queries() key | oracle | last_checked | SURVEY §2 op-ids covered |")
     print("|---|---|---|---|---|")
@@ -90,7 +90,7 @@ def main() -> None:
         print()
         print(
             f"Latest-check distribution: {dist}"
-            + (f"; never-checked (new this round): {n_new}" if n_new else "")
+            + (f"; no driver row: {n_new}" if n_new else "")
             + "."
         )
 

@@ -480,49 +480,18 @@ def test_pq_plan_size_constant_in_query_count(spark):
     assert "Union" not in ivfpq
 
 
-def test_driver_window_prioritizes_unverified_surface():
-    """The driver's per-round CORRECTNESS check covers ~the first 50
-    queries() entries. With more never-driver-verified entries than window
-    slots (the registry keeps growing), the rotation discipline is: NO
-    window slot may be wasted on an already-verified, unchanged entry while
-    an unverified one waits outside. Every slot in the first 50 must be
-    either never-driver-verified (no CORRECTNESS row in any prior round) or
-    declared materially changed (_CHANGED_ENTRIES)."""
-    import glob
-    import json
-
+def test_queries_follow_registration_order():
+    """The driver contract is the registry itself: names are unique,
+    queries() lists every entry in registration order, and oracle_sql()
+    lists the entries that have an oracle in that same order."""
     import ltss_spark.plans as plans
-    from ltss_spark.plans.registry import _CHANGED_ENTRIES, _DRIVER_PRIORITY
 
-    names = list(plans.queries().keys())
-    k = len(_DRIVER_PRIORITY)
-    assert names[:k] == _DRIVER_PRIORITY, "priority block does not head queries()"
-    assert k <= 50, "priority block overflows the driver window"
-
-    seen: set[str] = set()
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    for f in sorted(glob.glob(os.path.join(repo_root, "CORRECTNESS_r*.json"))):
-        try:
-            seen |= set(json.load(open(f)))
-        except OSError:
-            pass
-    if seen:
-        unseen = {n for n in names if n not in seen}
-        window = names[:50]
-        outside = [n for n in unseen if n not in set(window)]
-        if outside:
-            wasted = [
-                n for n in window if n in seen and n not in _CHANGED_ENTRIES
-            ]
-            assert not wasted, (
-                f"unverified entries {outside} wait outside the window while "
-                f"already-verified slots are wasted on {wasted}"
-            )
-    # queries() and oracle_sql() must agree on ordering and keys
-    oracle_names = list(plans.oracle_sql().keys())
-    positions = {n: i for i, n in enumerate(names)}
-    assert oracle_names == sorted(oracle_names, key=positions.__getitem__)
-    assert set(oracle_names) <= set(names)
+    names = [q.name for q in plans.REGISTRY]
+    assert len(names) == len(set(names)), "duplicate registry names"
+    assert list(plans.queries()) == names
+    assert list(plans.oracle_sql()) == [
+        q.name for q in plans.REGISTRY if q.oracle is not None
+    ]
 
 
 def test_survey_2c_fully_covered():
@@ -587,43 +556,6 @@ def test_suffix_reconstruct_join_never_broadcasts_the_corpus(spark):
     plan = _plan(suffix_span_groups(docs, direct_positions=0))
     assert "ShuffledHashJoin" in plan
     assert "BroadcastHashJoin" not in plan
-
-
-def test_driver_priority_lists_resolve_and_cover():
-    """Every name in the driver-ordering lists must resolve to a registered
-    entry (a typo would silently fall out of the correctness window), no
-    duplicates, and the first 50 queries() must include every op-id surface
-    that round 1 left driver-unverified."""
-    import ltss_spark.plans as plans
-    from ltss_spark.plans import registry as R
-
-    registered = {q.name for q in plans.REGISTRY}
-    listed = R._DRIVER_PRIORITY + R._DRIVER_SECOND
-    unknown = [n for n in listed if n not in registered]
-    assert not unknown, f"priority names not registered: {unknown}"
-    assert len(listed) == len(set(listed)), "duplicate names in priority lists"
-
-    window = list(plans.queries().keys())[:50]
-    # must_cover is DERIVED, not pinned (the r3 hardcoded set went stale the
-    # moment CORRECTNESS_r03 landed): every registered entry with no driver
-    # CORRECTNESS row in any round, plus every _CHANGED_ENTRIES member,
-    # must sit inside the 50-entry window — as long as they fit.
-    import glob
-    import json
-
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    seen: set[str] = set()
-    for f in sorted(glob.glob(os.path.join(repo_root, "CORRECTNESS_r*.json"))):
-        try:
-            seen |= set(json.load(open(f)))
-        except OSError:
-            pass
-    must_cover = {n for n in registered if n not in seen} | (
-        R._CHANGED_ENTRIES & registered
-    )
-    if seen and len(must_cover) <= 50:
-        missing = must_cover - set(window)
-        assert not missing, f"unverified op-ids pushed out of the 50-window: {missing}"
 
 
 def test_jdbc_scan_pushes_predicates_and_partitions(spark):
@@ -852,16 +784,6 @@ def test_stage_batches_rejects_null_batch_col(spark, tmp_path):
     with pytest.raises(ValueError, match="__HIVE_DEFAULT_PARTITION__"):
         stage_batches(spark.range(10), batch, 2, str(src))
     assert not (src / "__tmp").exists()
-
-
-def test_changed_entries_enumerates_stream_dedup_near():
-    """_CHANGED_ENTRIES is an enumerated set, not a positional slice of the
-    priority list: stream_dedup_near changed (stage_batches staging,
-    start-scoped partitions) while sitting in the drain block."""
-    from ltss_spark.plans.registry import _CHANGED_ENTRIES, _DRIVER_PRIORITY
-
-    assert "stream_dedup_near" in _CHANGED_ENTRIES
-    assert _CHANGED_ENTRIES <= set(_DRIVER_PRIORITY)
 
 
 def test_scoped_conf_serializes_concurrent_overrides(spark):
