@@ -1,7 +1,7 @@
 # Developer entry points. The sandbox has no Docker; targets that need it
 # say so and are safe to run anywhere Docker exists.
 
-.PHONY: test tier1 bench pg-live parity
+.PHONY: test tier1 bench pg-live parity ab
 
 test:
 	python -m pytest tests/ -q
@@ -18,6 +18,14 @@ bench:
 # Full oracle-parity sweep of every registry entry vs DuckDB at sf0.001
 parity:
 	python scripts/check_parity.py
+
+# Interleaved parent/change benchmark pairs with a verdict per metric:
+#   make ab PARENT=../parent-checkout [CHANGE=.] [WORKLOADS="corpus_dedup"] [SEEDS=1-10]
+CHANGE ?= .
+SEEDS ?= 1-10
+ab:
+	python3 scripts/ab_pairs.py --parent "$(PARENT)" --change "$(CHANGE)" \
+		--seeds "$(SEEDS)" $(if $(WORKLOADS),--workloads $(WORKLOADS))
 
 # Live TimescaleDB(+PostGIS) matrix — the reference's container tests
 # (reference tests/pytest/test_databases.py) re-expressed for this engine.

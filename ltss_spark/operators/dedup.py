@@ -92,22 +92,25 @@ def gram_windows(toks, k: int):
     return F.when(F.size(toks) >= k, sh).otherwise(F.array().cast("array<string>"))
 
 
-def shingles(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = 5) -> DataFrame:
-    """Distinct k-word shingles per document (the unit set for Jaccard).
-
-    Tokenization is a simple whitespace split (the corpus is synthetic
-    space-separated words); shingle = k consecutive tokens joined by ' '.
-    Built entirely from higher-order array functions — no Python UDF.
-    """
+def _shingle_sets(docs: DataFrame, text_col: str, id_col: str, k: int) -> DataFrame:
+    """(doc_id, sh): each doc's distinct k-word shingles as one array (empty
+    below k tokens). Whitespace tokens of the normalized text, shingle = k
+    consecutive tokens joined by ' ', higher-order functions only (no UDF);
+    per-doc ``array_distinct`` avoids a global distinct shuffle. Never
+    filter on ``size(sh)`` above this frame before materializing it: the
+    pushed-down predicate inlines the split into the window lambda and
+    re-tokenizes the text once per window."""
     toks = F.split(normalize_text(F.col(text_col)), " ")
-    # array_distinct BEFORE explode already makes (doc_id, shingle) unique —
-    # deduping per-document inside the array avoids a global distinct shuffle
-    return (
-        docs.select(F.col(id_col).alias("doc_id"), toks.alias("__toks"))
-        .select(
-            "doc_id",
-            F.explode(F.array_distinct(gram_windows("__toks", k))).alias("shingle"),
-        )
+    return docs.select(F.col(id_col).alias("doc_id"), toks.alias("__toks")).select(
+        "doc_id", F.array_distinct(gram_windows("__toks", k)).alias("sh")
+    )
+
+
+def shingles(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = 5) -> DataFrame:
+    """Distinct k-word shingles per document (the unit set for Jaccard),
+    (doc_id, shingle): the explode of :func:`_shingle_sets`."""
+    return _shingle_sets(docs, text_col, id_col, k).select(
+        "doc_id", F.explode("sh").alias("shingle")
     )
 
 
@@ -495,29 +498,16 @@ def shingle_base_hash(shingle: Column) -> Column:
     return F.conv(F.substring(F.md5(shingle), 1, 15), 16, 10).cast("long") % MERSENNE31
 
 
-def minhash_signatures(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 5,
-    num_hashes: int = 12,
-) -> DataFrame:
-    """Wide MinHash signature per document: columns doc_id, h0..h{n-1} where
-    h_i = MIN over shingles of (A_i * base + B_i) mod 2^31-1.
-
-    One md5 per shingle (not per shingle x seed) + cheap integer universal
-    hashes, aggregated as ``num_hashes`` MIN columns in a single hash
-    aggregation — no seed explode, so the shuffle volume is |shingles|, not
-    |shingles| x num_hashes. All arithmetic is exact int64, bit-identical in
-    any engine (oracle-checkable).
-    """
+def _minhash(sh: DataFrame, num_hashes: int) -> DataFrame:
+    """(doc_id, h0..h{n-1}) from an exploded (doc_id, shingle) frame: one
+    md5 per shingle, then ``num_hashes`` MIN aggregates of the universal
+    hashes in one hash aggregation."""
     A, B = _uh_params(num_hashes)
     base = shingle_base_hash(F.col("shingle")).alias("base")
-    sh = shingles(docs, text_col, id_col, k).select("doc_id", base)
     # one parsed F.expr per hash (1 py4j round trip) instead of ~8 composed
     # Column ops each — same expression tree, ~100 ms less fixed driver
     # latency per build (r12 construction profile)
-    return sh.groupBy("doc_id").agg(
+    return sh.select("doc_id", base).groupBy("doc_id").agg(
         *[
             F.expr(f"min(({A[i]} * base + {B[i]}) % {MERSENNE31}) AS h{i}")
             for i in range(num_hashes)
@@ -525,27 +515,16 @@ def minhash_signatures(
     )
 
 
-def band_signatures(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 5,
-    num_hashes: int = 12,
-    bands: int = 4,
-) -> DataFrame:
-    """(doc_id, band, band_sig): each document's LSH band keys — the
-    signature is split into ``bands`` bands of num_hashes/bands MinHash
-    values, each band md5-condensed. Shared by the batch pair join
-    (:func:`minhash_lsh_pairs`) and the streaming signature STORE
-    (incremental near-dup: new documents probe the store on these exact
-    keys). A doc with fewer than k tokens has no shingles and emits no
-    rows (it can collide with nothing)."""
+def _band_keys(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
+    """(doc_id, band, band_sig) from a :func:`_minhash` signature frame:
+    ``bands`` bands of num_hashes/bands values, each md5-condensed."""
     if num_hashes % bands != 0:
         raise ValueError(
-            f"bands ({bands}) must divide num_hashes ({num_hashes})"
+            f"bands ({bands}) must divide num_hashes ({num_hashes}): the "
+            "trailing hashes would be silently dropped from every band "
+            "signature, paying their compute for zero recall"
         )
     rows_per_band = num_hashes // bands
-    sig = minhash_signatures(docs, text_col, id_col, k, num_hashes)
     # inline() emits (band, band_sig) straight from the struct fields: one
     # select + one parsed expression instead of explode + a second
     # flattening select (each select re-analyzes the whole tree; the
@@ -564,6 +543,65 @@ def band_signatures(
     return sig.selectExpr("doc_id", f"inline(array({structs}))")
 
 
+def _lsh_join(banded: DataFrame) -> DataFrame:
+    """Distinct (doc_a, doc_b), doc_a < doc_b, of docs sharing a band key.
+    The keys are lazily checkpointed first: the two join sides get no
+    ReusedExchange (r8, docs/PLANS.md), so each would re-run the whole
+    signature pipeline; the checkpoint holds bands x |docs| tiny rows."""
+    banded = banded.localCheckpoint(eager=False)
+    a = banded.alias("a")
+    b = banded.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.band_sig") == F.col("b.band_sig"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .distinct()
+    )
+
+
+def minhash_signatures(
+    docs: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    k: int = 5,
+    num_hashes: int = 12,
+) -> DataFrame:
+    """Wide MinHash signature per document: columns doc_id, h0..h{n-1} where
+    h_i = MIN over shingles of (A_i * base + B_i) mod 2^31-1.
+
+    One md5 per shingle (not per shingle x seed) + cheap integer universal
+    hashes, aggregated as ``num_hashes`` MIN columns in a single hash
+    aggregation — no seed explode, so the shuffle volume is |shingles|, not
+    |shingles| x num_hashes. All arithmetic is exact int64, bit-identical in
+    any engine (oracle-checkable).
+    """
+    return _minhash(shingles(docs, text_col, id_col, k), num_hashes)
+
+
+def band_signatures(
+    docs: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    k: int = 5,
+    num_hashes: int = 12,
+    bands: int = 4,
+) -> DataFrame:
+    """(doc_id, band, band_sig): each document's LSH band keys — the
+    signature is split into ``bands`` bands of num_hashes/bands MinHash
+    values, each band md5-condensed. Shared by the batch pair join
+    (:func:`minhash_lsh_pairs`) and the streaming signature STORE
+    (incremental near-dup: new documents probe the store on these exact
+    keys). A doc with fewer than k tokens has no shingles and emits no
+    rows (it can collide with nothing)."""
+    return _band_keys(
+        minhash_signatures(docs, text_col, id_col, k, num_hashes), num_hashes, bands
+    )
+
+
 def minhash_lsh_pairs(
     docs: DataFrame,
     text_col: str = "text",
@@ -577,39 +615,11 @@ def minhash_lsh_pairs(
     candidates. Returns distinct (doc_a, doc_b) with doc_a < doc_b.
 
     At scale: the only join is a self-equi-join on (band, band_sig) — the
-    classic LSH bucket join; bucket skew (a band value shared by many docs)
-    is the known hazard and is handled by AQE skew-join splitting.
-
-    The banded signatures are lazily localCheckpoint-ed before the
-    self-join: measured (r8, docs/PLANS.md) the two join sides do NOT get
-    a ReusedExchange — each side re-ran the full shingle->md5->minhash
-    pipeline (two parquet scans of the corpus). The checkpoint
-    materializes the SIGNATURE set (bands x |docs| tiny rows, not the
-    corpus) once and both sides read the same blocks — at 100 TB this is
-    exactly the "compute signatures once, then bucket-join" layout a
-    production dedup runs.
+    classic LSH bucket join over checkpointed band keys (:func:`_lsh_join`);
+    bucket skew (a band value shared by many docs) is the known hazard and
+    is handled by AQE skew-join splitting.
     """
-    if num_hashes % bands != 0:
-        raise ValueError(
-            f"bands ({bands}) must divide num_hashes ({num_hashes}): the "
-            "trailing hashes would be silently dropped from every band "
-            "signature, paying their compute for zero recall"
-        )
-    banded = band_signatures(
-        docs, text_col, id_col, k, num_hashes, bands
-    ).localCheckpoint(eager=False)
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_sig") == F.col("b.band_sig"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    return _lsh_join(band_signatures(docs, text_col, id_col, k, num_hashes, bands))
 
 
 def _span_frames(
@@ -944,52 +954,32 @@ def minhash_verified_pairs(
     threshold: float = 0.5,
 ) -> DataFrame:
     """The full production LSH pipeline: banded MinHash CANDIDATES
-    (:func:`minhash_lsh_pairs` — approximate, admits false positives by
+    (as :func:`minhash_lsh_pairs` — approximate, admits false positives by
     design) followed by the VERIFICATION stage every deployed dedup runs:
     exact shingle-set Jaccard per candidate pair, flagged against
     ``threshold``. Returns every candidate with its exact similarity:
-    (doc_a, doc_b, jaccard, verified).
+    (doc_a, doc_b, jaccard, verified). ``id_col`` must be unique: a pair's
+    Jaccard assumes one row (one shingle set) per document.
 
-    Scale shape: verification cost is Σ|shingles(doc)| over CANDIDATE
-    pairs only — the LSH stage already cut the quadratic corpus term, so
-    the exact set intersection is an equi-join on (pair, shingle), never
-    all-pairs. The distinct shingle frame is lazily checkpointed: it
-    feeds both sides of the intersection join and the size aggregate,
-    and (like the banded signatures) materializing it once is exactly
-    the "compute features once, then join" layout a production pipeline
-    uses. Jaccard = i / (|A| + |B| - i) is one IEEE division of exact
-    ints, rounded to 6 — engine-portable."""
-    cand = minhash_lsh_pairs(
-        docs, text_col, id_col, k, num_hashes, bands
-    ).localCheckpoint(eager=False)
-    ds = shingles(docs, text_col, id_col, k).localCheckpoint(eager=False)
-    sizes = ds.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    x, y = ds.alias("x"), ds.alias("y")
-    inter = (
-        cand.join(x, F.col("x.doc_id") == F.col("doc_a"))
-        .join(
-            y,
-            (F.col("y.doc_id") == F.col("doc_b"))
-            & (F.col("y.shingle") == F.col("x.shingle")),
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("i"))
+    One tokenize-and-shingle pass: the per-document shingle sets are
+    lazily checkpointed once, the signatures come from their explode, and
+    each candidate joins both docs' sets for i = |A ∩ B|
+    (``array_intersect``). Jaccard = i / (|A| + |B| - i), one IEEE division
+    of exact ints rounded to 6, is engine-portable. Verification costs
+    Σ(|A| + |B|) over CANDIDATE pairs only, never all-pairs. A doc below
+    k tokens has no signature, so it is never a candidate."""
+    sets = _shingle_sets(docs, text_col, id_col, k).localCheckpoint(eager=False)
+    sig = _minhash(
+        sets.select("doc_id", F.explode("sh").alias("shingle")), num_hashes
     )
-    sa = sizes.select(
-        F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a")
-    )
-    sb = sizes.select(
-        F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b")
-    )
-    jac = F.round(
-        F.coalesce(F.col("i"), F.lit(0))
-        / (F.col("sz_a") + F.col("sz_b") - F.coalesce(F.col("i"), F.lit(0))),
-        6,
-    )
+    cand = _lsh_join(_band_keys(sig, num_hashes, bands))
+    a = sets.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
+    b = sets.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
+    i = F.size(F.array_intersect("sh_a", "sh_b"))
+    jac = F.round(i / (F.size("sh_a") + F.size("sh_b") - i), 6)
     return (
-        cand.join(inter, ["doc_a", "doc_b"], "left")
-        .join(sa, "doc_a")
-        .join(sb, "doc_b")
+        cand.join(a, "doc_a")
+        .join(b, "doc_b")
         .select(
             "doc_a",
             "doc_b",

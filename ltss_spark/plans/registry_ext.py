@@ -2457,8 +2457,9 @@ def ext_perplexity_buckets(spark, sf_dir):
     """,
     survey="ext_dedup_near join_inner agg_basic (LSH + VERIFY: exact "
     "shingle-Jaccard over candidate pairs only — the false-positive "
-    "filter every production MinHash dedup runs; intersection is an "
-    "equi-join on (pair, shingle), never all-pairs)",
+    "filter every production MinHash dedup runs; each candidate joins "
+    "both docs' shingle sets and intersects them per pair, never "
+    "all-pairs)",
 )
 def ext_dedup_minhash_verified(spark, sf_dir):
     """Full production LSH pipeline (operators/dedup.

@@ -109,6 +109,79 @@ def test_minhash_lsh_finds_high_jaccard_pairs(spark):
     assert j[(0, 1)] > 0.9
 
 
+def test_minhash_verified_pairs_matches_python_jaccard(spark):
+    """Differential: every LSH candidate's (jaccard, verified) equals plain
+    Python over the distinct k-shingles of the lowercased,
+    whitespace-collapsed text. The corpus has a doc shorter than k, an
+    empty and a NULL text, a doc whose shingles repeat (multiplicity must
+    not count) and a candidate pair below the threshold (j = 1/3)."""
+    import re
+    from decimal import ROUND_HALF_UP, Decimal
+
+    from ltss_spark.operators.dedup import minhash_lsh_pairs, minhash_verified_pairs
+
+    k = 3
+    texts = {
+        0: "a b c a b c a b c a b c",
+        1: "A  b C a\tb c a b c d",
+        2: "echo india delta juliet golf lima",
+        3: "echo india delta juliet charlie foxtrot",
+        4: "Echo India delta juliet golf lima",
+        5: "x y",
+        6: "",
+        7: None,
+        8: "unrelated words that share nothing with anything else here",
+    }
+    docs = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
+
+    def shingle_set(text):
+        toks = re.sub(r"\s+", " ", (text or "").lower()).strip().split(" ")
+        return {" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)}
+
+    def jaccard(a, b):
+        sa, sb = shingle_set(texts[a]), shingle_set(texts[b])
+        i = len(sa & sb)
+        # Spark's round is HALF_UP on the double's shortest decimal form
+        return float(
+            Decimal(repr(i / (len(sa) + len(sb) - i))).quantize(
+                Decimal("1e-6"), rounding=ROUND_HALF_UP
+            )
+        )
+
+    cands = {(r.doc_a, r.doc_b) for r in minhash_lsh_pairs(docs, k=k).collect()}
+    want = {(a, b, jaccard(a, b), jaccard(a, b) >= 0.5) for a, b in cands}
+    got = {
+        (r.doc_a, r.doc_b, r.jaccard, r.verified)
+        for r in minhash_verified_pairs(docs, k=k).collect()
+    }
+    assert got == want
+    # the corpus exercises what it claims to
+    assert {(0, 1), (2, 3), (2, 4)} <= cands
+    assert (2, 3, 0.333333, False) in got  # candidate below the threshold
+    assert (0, 1, 0.75, True) in got  # {abc, bca, cab} vs the same + bcd
+    assert not {5, 6, 7} & {d for pair in cands for d in pair}
+
+
+def test_minhash_verified_pairs_shingles_once(spark):
+    """One tokenize-and-shingle pass: a checkpointed collect of the
+    verified pairs runs 6 jobs on the fixture corpus (12 when signatures
+    and verification each shingled it and verification joined the
+    exploded shingles with themselves)."""
+    from ltss_spark.operators.dedup import minhash_verified_pairs
+    from ltss_spark.sources.batch import load_table
+
+    sc = spark.sparkContext
+    docs = load_table(spark, SF_SMOKE, "documents")
+    group = "test_minhash_verified_pairs_shingles_once"
+    sc.setJobGroup(group, group)
+    try:
+        rows = minhash_verified_pairs(docs).localCheckpoint().collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert rows
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 6
+
+
 def test_containment_catches_subset_docs_jaccard_misses(spark):
     """The capability claim, not just the formula: a short doc fully
     quoted inside a much longer one is invisible to Jaccard (union

@@ -1,5 +1,5 @@
 """Every SQL-expressible registry entry must match its DuckDB oracle at
-sf0.001 — the local mirror of the driver's CORRECTNESS gate."""
+sf0.001 — tier-1 parity at sf0.001 is the correctness gate."""
 
 import pytest
 
@@ -23,7 +23,7 @@ def test_oracle_parity(spark, q):
     conf_before = spark.conf.getAll
     df = q.build(spark, SF_SMOKE)
     if q.oracle is None:
-        # rows-only check, mirroring the driver's weaker path
+        # no oracle: the entry must at least build and run
         assert df.count() >= 0
     else:
         ok, msg = compare(df, q.oracle, SF_SMOKE)
