@@ -14,15 +14,19 @@ Per workload and metric the table gives both medians, the parent's
 quartiles and spread (IQR / median), the relative change of the medians,
 and the pairs the change won (ties count for neither side). The verdict:
 
-- ``gain``: the change won at least 9/10 of the pairs, and its median is
-  better than the parent's by more than the parent's IQR;
-- ``regression``: the change's median is worse by more than the bound;
+- ``gain``: no run of the change failed or was incorrect, the change won
+  at least 9/10 of all pairs run, and its median is better than the
+  parent's by more than the parent's IQR;
+- ``regression``: more runs of the change failed or were incorrect than of
+  the parent, or the change's median is worse by more than the bound;
 - ``unresolved``: the parent's spread is wider than the bound, and not
   every run of the change reads better than every run of the parent;
 - ``within bound``: anything else.
 
-A pair counts only if both runs finished with ``correct: true``; every run
-that failed or was incorrect is listed.
+Medians and quartiles use the pairs where both runs finished with
+``correct: true`` and no failed operation; every run that failed or was
+incorrect is listed. Seed specs and quartiles come from
+``perfbench/steadiness.py``.
 """
 
 from __future__ import annotations
@@ -34,19 +38,14 @@ import statistics
 import subprocess
 import sys
 
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from perfbench.steadiness import seeds, spread  # noqa: E402
+
 SIDES = ("parent", "change")
 
 
-def seeds(spec: str) -> list[int]:
-    out: list[int] = []
-    for part in spec.split(","):
-        a, _, b = part.partition("-")
-        out += list(range(int(a), int(b or a) + 1))
-    return out
-
-
 def run_once(checkout: str, workload: str, seed: int, seconds: float) -> dict:
-    cmd = ["python3", "perfbench/run.py", "--workload", workload,
+    cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
            "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
     p = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True, timeout=900)
     lines = p.stdout.strip().splitlines()
@@ -64,12 +63,16 @@ def ok(run: dict) -> bool:
 
 
 def verdict(par: list[float], chg: list[float], wins: int, pairs: int,
-            lower: bool, bound: float) -> str:
-    pm, cm = statistics.median(par), statistics.median(chg)
-    q1, _, q3 = statistics.quantiles(par, n=4)
+            lower: bool, bound: float, bad: tuple[int, int] = (0, 0)) -> str:
+    """``pairs`` counts every pair run; ``bad`` is (parent, change) runs that
+    failed or were incorrect."""
+    pm, q1, q3, _ = spread(par)
+    cm = statistics.median(chg)
     sign = 1.0 if lower else -1.0
     worse = sign * (cm - pm) / pm
-    if wins >= 0.9 * pairs and sign * (pm - cm) > q3 - q1:
+    if bad[1] > bad[0]:
+        return "regression"
+    if bad[1] == 0 and wins >= 0.9 * pairs and sign * (pm - cm) > q3 - q1:
         return "gain"
     if worse > bound:
         return "regression"
@@ -81,7 +84,9 @@ def verdict(par: list[float], chg: list[float], wins: int, pairs: int,
 
 def summarize(workload: str, pairs: list[tuple[dict, dict]], metrics: list[dict]) -> None:
     good = [(p, c) for p, c in pairs if ok(p) and ok(c)]
-    print(f"\n## {workload}: {len(good)} of {len(pairs)} pairs with both runs correct")
+    bad = (sum(not ok(p) for p, _ in pairs), sum(not ok(c) for _, c in pairs))
+    print(f"\n## {workload}: {len(good)} of {len(pairs)} pairs with both runs correct; "
+          f"failed or incorrect: parent {bad[0]}, change {bad[1]}")
     if len(good) < 2:
         return
     print("| metric | parent median | change median | parent Q1 | parent Q3 "
@@ -92,12 +97,12 @@ def summarize(workload: str, pairs: list[tuple[dict, dict]], metrics: list[dict]
         par = [p["result"]["metrics"][name]["value"] for p, _ in good]
         chg = [c["result"]["metrics"][name]["value"] for _, c in good]
         wins = sum((c < p) if lower else (c > p) for p, c in zip(par, chg))
-        pm, cm = statistics.median(par), statistics.median(chg)
-        q1, _, q3 = statistics.quantiles(par, n=4)
-        v = verdict(par, chg, wins, len(good), lower, m["bound"])
+        pm, q1, q3, sp = spread(par)
+        cm = statistics.median(chg)
+        v = verdict(par, chg, wins, len(pairs), lower, m["bound"], bad)
         print(f"| `{name}` | {pm:.4g} | {cm:.4g} | {q1:.4g} | {q3:.4g} "
-              f"| {(q3 - q1) / pm:.3f} | {(cm - pm) / pm:+.3f} "
-              f"| {wins}/{len(good)} | {v} |")
+              f"| {sp:.3f} | {(cm - pm) / pm:+.3f} "
+              f"| {wins}/{len(pairs)} | {v} |")
 
 
 def main(argv=None) -> int:

@@ -7,7 +7,7 @@ PARENT = [10, 11, 12, 10.5, 11.5, 10, 11, 12, 10.5, 11.5]  # IQR/median 0.11
 
 def test_seed_specs():
     assert seeds("1-3") == [1, 2, 3]
-    assert seeds("21,23-24") == [21, 23, 24]
+    assert seeds("21,23") == [21, 23]
 
 
 def test_verdicts_follow_pairs_won_spread_and_bound():
@@ -23,3 +23,13 @@ def test_verdicts_follow_pairs_won_spread_and_bound():
     assert verdict(wide, [11] * 10, 5, 10, True, 0.25) == "unresolved"
     # a wide spread is resolved when every change run beats every parent run
     assert verdict(wide, [5] * 10, 10, 10, True, 0.25) == "within bound"
+
+
+def test_no_gain_when_change_runs_fail():
+    # 7 wins over 10 pairs run (3 change runs incorrect) is no gain, even
+    # though the change won every pair where both runs were correct
+    assert verdict(PARENT[:7], [7.5] * 7, 7, 10, True, 0.25, (0, 3)) == "regression"
+    # one failed change run, as many as the parent's, blocks a gain
+    assert verdict(PARENT, [7.5] * 9, 9, 10, True, 0.25, (1, 1)) == "within bound"
+    # failures on the parent side alone leave the verdict to the values
+    assert verdict(PARENT[:9], [7.5] * 9, 9, 10, True, 0.25, (1, 0)) == "gain"
